@@ -57,9 +57,8 @@ object Main {
       sparkConfig = confs.toMap)
 
     // H9: arbitrary user confs pass through to the session
-    val builder = Sessions.builder(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val builder = Sessions.builder(s"local[$cpus]", cpus)
     cfg.sparkConfig.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

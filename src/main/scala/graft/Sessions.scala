@@ -30,20 +30,21 @@ object Sessions {
       // each status's permission field by FORKING `ls -ld` per file (the
       // measured r14 driver-gap hotspot: Shell.runCommand owned ~30% of the
       // q42b wall). Driver-side listing of a few hundred local dirs is
-      // microseconds and forks nothing. Overridable for deployments whose
-      // FS is remote (HDFS/S3), where distributed listing is the right
-      // trade again (SPARK_GRAFT_LIST_PAR_THRESHOLD=32 restores the Spark
-      // default).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR_THRESHOLD", "512"))
+      // microseconds and forks nothing. Deployments whose FS is remote
+      // (HDFS/S3), where distributed listing is the right trade again,
+      // restore the Spark default of 32 with `Main --conf
+      // spark.sql.sources.parallelPartitionDiscovery.threshold=32` (applied
+      // after this builder) or `.config` on the returned builder.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
       // Literal IN lists push into parquet as per-value predicates up to
       // this many values; past it Spark degrades the pushed filter to a
       // min/max RANGE (SPARK-32792), which prunes nothing for scattered
       // candidate-id lookups (the standing-index probe shape). Row-group
       // stats/dictionary evaluation of a ~1k-value IN is metadata-only —
       // microseconds per row group against the full decode it saves.
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_IN_PUSH_THRESHOLD", "1024"))
+      // Overridden like the listing threshold above (`Main --conf` or
+      // `.config` on the builder).
+      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // events.parquet carries TIMESTAMP(NANOS); Spark only reads it as long

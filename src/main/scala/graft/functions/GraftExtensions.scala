@@ -58,59 +58,75 @@ object GraftExtensions {
     case args => throw new IllegalArgumentException(s"expected 2 arguments, got ${args.length}")
   }
 
-  // the 2-arg ExpressionInfo ctor is the only one stable across Spark minors;
-  // the usage string still documents the arity for readers of this file
+  // the 2-arg ExpressionInfo ctor is the only one stable across Spark minors,
+  // so each function's usage is a comment above its description
   private def info(name: String) =
     new ExpressionInfo(classOf[GraftExtensions].getName, name)
 
   type FunctionDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private def fd(name: String, usage: String,
+  private def fd(name: String,
       builder: Seq[Expression] => Expression): FunctionDescription =
     (FunctionIdentifier(name), info(name), builder)
 
   val descriptions: Seq[FunctionDescription] = Seq(
     // ---- native expressions (fixed arity, literal params)
-    fd("graft_simhash60", "_FUNC_(words) - 60-bit simhash of a word array",
+    // graft_simhash60(words) - 60-bit simhash of a word array
+    fd("graft_simhash60",
       { case Seq(e) => NativeExpressions.SimHash60Expr(e)
         case a => throw new IllegalArgumentException(s"expected 1 argument, got ${a.length}") }),
-    fd("graft_minhash_sig", "_FUNC_(shingles, k) - k-member minhash signature",
+    // graft_minhash_sig(shingles, k) - k-member minhash signature
+    fd("graft_minhash_sig",
       { case Seq(e, k) => NativeExpressions.MinHashSigExpr(e, litInt(k, "k"))
         case a => throw new IllegalArgumentException(s"expected 2 arguments, got ${a.length}") }),
-    fd("graft_shingles", "_FUNC_(words, n) - distinct word n-grams",
+    // graft_shingles(words, n) - distinct word n-grams
+    fd("graft_shingles",
       { case Seq(e, n) => NativeExpressions.ShinglesExpr(e, litInt(n, "n"))
         case a => throw new IllegalArgumentException(s"expected 2 arguments, got ${a.length}") }),
-    fd("graft_word_ngrams", "_FUNC_(words, n) - word n-gram multiset",
+    // graft_word_ngrams(words, n) - word n-gram multiset
+    fd("graft_word_ngrams",
       { case Seq(e, n) =>
           NativeExpressions.ShinglesExpr(e, litInt(n, "n"), distinct = false)
         case a => throw new IllegalArgumentException(s"expected 2 arguments, got ${a.length}") }),
-    fd("graft_vec_dot", "_FUNC_(a, b) - float-vector dot product",
+    // graft_vec_dot(a, b) - float-vector dot product
+    fd("graft_vec_dot",
       { case Seq(a, b) => NativeExpressions.FloatVecDot(a, b)
         case a => throw new IllegalArgumentException(s"expected 2 arguments, got ${a.length}") }),
-    fd("graft_array_jaccard", "_FUNC_(a, b) - jaccard of two string sets",
+    // graft_array_jaccard(a, b) - jaccard of two string sets
+    fd("graft_array_jaccard",
       { case Seq(a, b) => NativeExpressions.ArrayJaccardExpr(a, b)
         case a => throw new IllegalArgumentException(s"expected 2 arguments, got ${a.length}") }),
     // ---- text analysis (Column-API lifts)
-    fd("graft_token_count", "_FUNC_(text) - whitespace token count",
+    // graft_token_count(text) - whitespace token count
+    fd("graft_token_count",
       lift1(TextFunctions.tokenCount)),
-    fd("graft_bpe_token_count", "_FUNC_(text) - BPE-ish subword token count",
+    // graft_bpe_token_count(text) - BPE-ish subword token count
+    fd("graft_bpe_token_count",
       lift1(TextFunctions.bpeTokenCount)),
-    fd("graft_quality_score", "_FUNC_(text) - composite quality score in [0,1]",
+    // graft_quality_score(text) - composite quality score in [0,1]
+    fd("graft_quality_score",
       lift1(TextFunctions.qualityScore)),
-    fd("graft_lang_id", "_FUNC_(text) - stopword-profile language id",
+    // graft_lang_id(text) - stopword-profile language id
+    fd("graft_lang_id",
       lift1(TextFunctions.langId)),
-    fd("graft_fingerprint", "_FUNC_(text) - md5 content fingerprint",
+    // graft_fingerprint(text) - md5 content fingerprint
+    fd("graft_fingerprint",
       lift1(TextFunctions.fingerprint)),
-    fd("graft_rolling_fingerprint", "_FUNC_(text) - rolling polynomial fingerprint",
+    // graft_rolling_fingerprint(text) - rolling polynomial fingerprint
+    fd("graft_rolling_fingerprint",
       lift1(TextFunctions.rollingFingerprint)),
-    fd("graft_alpha_frac", "_FUNC_(text) - alphabetic character fraction",
+    // graft_alpha_frac(text) - alphabetic character fraction
+    fd("graft_alpha_frac",
       lift1(graft.operators.Curation.alphaFrac)),
-    fd("graft_redact_pii", "_FUNC_(text) - emails/phones replaced with tags",
+    // graft_redact_pii(text) - emails/phones replaced with tags
+    fd("graft_redact_pii",
       lift1(graft.operators.Curation.redactPii)),
-    fd("graft_hash60", "_FUNC_(v) - portable 60-bit md5 hash",
+    // graft_hash60(v) - portable 60-bit md5 hash
+    fd("graft_hash60",
       lift1((c: Column) => Portable.hash60(c))),
-    fd("graft_hash60_seeded", "_FUNC_(v, seed) - seeded portable 60-bit md5 hash",
+    // graft_hash60_seeded(v, seed) - seeded portable 60-bit md5 hash
+    fd("graft_hash60_seeded",
       lift2((c: Column, s: Column) => Portable.hash60(c, s))),
   )
 }

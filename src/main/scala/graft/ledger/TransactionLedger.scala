@@ -2,7 +2,7 @@ package graft.ledger
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The `hudi_transactions` relation (app.py:41-51) as a typed Dataset with

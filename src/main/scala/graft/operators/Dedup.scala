@@ -288,48 +288,22 @@ object Dedup {
       .select(col(idCol).as("doc_id"), split(col(textCol), "\\s+").as("w"))
       .filter(size(col("w")) >= k)
     // the per-position fingerprint stream — the dominant compute (one
-    // k-token string build + md5 per corpus position). The r14 shape
-    // ("join") evaluated it TWICE: once into the duplicated-fp aggregate
-    // and again as the left side of the semi-join back (the two join sides
-    // share no exchange Spark could reuse). Default is the min/max window
-    // over fp: the stream is computed ONCE and takes one exchange keyed on
-    // fp; the window's in-partition sort is cheaper than either the md5
-    // recompute ("join"), a persist+checkpoint round trip ("persist"), or
-    // a collect_list aggregate ("agglist") — measured interleaved in one
-    // JVM, n=3, at sf0.1 AND a 4× corpus, on wall and task time both (see
-    // OPTIMIZATION_r15.md O5; x04's opposite verdict on windows does not
-    // transfer because there the alternative recomputed nothing).
-    val mode = sys.props.getOrElse("graft.spanDup",
-      sys.env.getOrElse("SPARK_GRAFT_SPAN_DUP", "window"))
-    val posRaw = toks
+    // k-token string build + md5 per corpus position). A min/max window
+    // over fp computes the stream ONCE and takes one exchange keyed on fp.
+    // It beat a semi-join back onto a duplicated-fp aggregate (evaluates the
+    // stream twice), a persist+checkpoint round trip and a collect_list
+    // aggregate — measured interleaved in one JVM, n=3, at sf0.1 and a 4×
+    // corpus, on wall and task time both (OPTIMIZATION_r15.md O5).
+    val pos = toks
       .select(col("doc_id"),
         posexplode(graft.functions.NativeExpressions.word_ngrams(col("w"), k)))
       .select(col("doc_id"), (col("pos") + lit(1L)).as("p"),
         fpOf(col("col")).as("fp"))
-    val pos = if (mode == "persist")
-      posRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else posRaw
-    val candidates = mode match {
-      case "window" =>
-        val wf = org.apache.spark.sql.expressions.Window.partitionBy("fp")
-        pos.withColumn("__lo", min("doc_id").over(wf))
-          .withColumn("__hi", max("doc_id").over(wf))
-          .filter(col("__lo") =!= col("__hi"))
-          .drop("__lo", "__hi")
-      case "agglist" =>
-        pos.groupBy("fp")
-          .agg(min("doc_id").as("lo"), max("doc_id").as("hi"),
-            collect_list(struct(col("doc_id"), col("p"))).as("ps"))
-          .filter(col("lo") =!= col("hi"))
-          .select(explode(col("ps")).as("dp"), col("fp"))
-          .select(col("dp.doc_id").as("doc_id"), col("dp.p").as("p"), col("fp"))
-      case _ =>
-        val dupFp = pos.groupBy("fp")
-          .agg(min("doc_id").as("lo"), max("doc_id").as("hi"))
-          .filter(col("lo") =!= col("hi"))
-          .select("fp")
-        pos.join(dupFp, Seq("fp"), "left_semi")
-    }
+    val wf = org.apache.spark.sql.expressions.Window.partitionBy("fp")
+    val candidates = pos.withColumn("__lo", min("doc_id").over(wf))
+      .withColumn("__hi", max("doc_id").over(wf))
+      .filter(col("__lo") =!= col("__hi"))
+      .drop("__lo", "__hi")
     val dpos =
       if (!verify) candidates
       else {
@@ -350,7 +324,7 @@ object Dedup {
       }
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("p")
-    val spans = dpos
+    dpos
       .withColumn("prev", lag("p", 1).over(byDoc))
       .withColumn("brk",
         when(col("prev").isNull || col("p") - col("prev") > k, 1).otherwise(0))
@@ -359,15 +333,6 @@ object Dedup {
       .agg(min("p").as("span_start"),
         (max(col("p")) - min(col("p")) + k).as("span_len"))
       .select(col("doc_id"), col("span_start"), col("span_len"))
-    if (mode != "persist") spans
-    else {
-      // materialize (maximal spans — bounded by dup positions, small) so the
-      // fingerprint cache RELEASES now instead of pinning the stream for the
-      // session's lifetime — the ngramJaccardPrefixJoin persist hygiene
-      val out = spans.localCheckpoint()
-      pos.unpersist()
-      out
-    }
   }
 
   /** Apply a [[crossDocSpans]] result: rebuild each document's text with
@@ -388,7 +353,7 @@ object Dedup {
       .withColumn(textCol,
         when(col("__sp").isNull, col(textCol)).otherwise(
           concat_ws(" ",
-            filter(split(col(textCol), "\\s+"), (w, i) =>
+            filter(split(col(textCol), "\\s+"), (_, i) =>
               !exists(col("__sp"), s =>
                 i + 1 >= s.getField("span_start") &&
                   i + 1 < s.getField("span_start") + s.getField("span_len"))))))
@@ -439,14 +404,18 @@ object Dedup {
 
   // ------------------------------------------------------- n-gram Jaccard
 
-  /** Exact n-gram Jaccard pairs ≥ threshold: pair join within a block + the
-    * native jaccard expression (one hash-set pass per pair). `blockCol`
-    * bounds the quadratic pair space (all-pairs within a block); None =
-    * global — only sane for small corpora or as the oracle baseline. An
-    * explode-and-count formulation loses here because tiny vocabularies make
-    * shingle collisions dense; with realistic vocabularies both work, and
-    * minhashNearDups is the true scale path either way.
+  /** Attach each token's document frequency to the exploded (…, tok) stream:
+    * a two-level aggregate to the distinct `(tok, df)` table (the exchange
+    * carries only per-map-partition partial counts) joined back on tok. The
+    * planner broadcasts the df table when it fits under the broadcast cap —
+    * no full-stream exchange and no sort, the measured winner over a
+    * `count() over (partition by tok)` window at sf0.1 and on a 6×
+    * corpus (OPTIMIZATION_r15.md, x04 A/B) — and shuffle-joins it when it
+    * does not.
     */
+  private def withTokenDf(toks: DataFrame): DataFrame =
+    toks.join(toks.groupBy("tok").agg(count(lit(1)).as("df")), Seq("tok"))
+
   /** Directed n-gram CONTAINMENT join: pairs (a, b), a ≠ b, with
     * |sh(a) ∩ sh(b)| / |sh(a)| ≥ threshold — the asymmetric near-dup
     * (verbatim quotes, boilerplate, subset pages) that symmetric Jaccard
@@ -458,41 +427,6 @@ object Dedup {
     * nothing bounds the container's size from above; the size filter only
     * requires |b| ≥ ceil(t·|a|)). Exact verification on candidates.
     */
-  /** Attach each token's document frequency to the exploded (…, tok) stream.
-    * Three plan-identical-output strategies, selectable for A/B measurement
-    * via SPARK_GRAFT_TOKEN_DF (values: window | broadcast | shj):
-    *
-    *  - `window`  — `count() over (partition by tok)`: ONE exchange of the
-    *    full stream keyed by tok, but WindowExec fully SORTS the stream
-    *    inside each partition (r14's O5; the driver's bench measured the
-    *    sort costing more than the exchange it saved at sf0.1).
-    *  - `broadcast` — two-level: partial+final aggregate to the distinct
-    *    `(tok, df)` table (the exchange carries only per-map-partition
-    *    partial counts), then broadcast it back onto the stream: NO
-    *    full-stream exchange and NO sort. Bounded by the distinct-token
-    *    vocabulary fitting the broadcast cap — true for word-shingle
-    *    vocabularies at any corpus size that blocks its prefix join sanely,
-    *    but the `shj` fallback exists for when it is not.
-    *  - `shj` — same two-level aggregate, joined back with a SHUFFLE_HASH
-    *    hint: the stream is exchanged by tok once (same bytes as `window`)
-    *    but probed against a per-partition hash table instead of sorted.
-    *
-    * Default is `broadcast` — the measured winner at sf0.1 and on a 6×
-    * replicated corpus (see OPTIMIZATION_r15.md: x04 A/B, n=3 each).
-    */
-  private def withTokenDf(toks: DataFrame): DataFrame =
-    sys.props.getOrElse("graft.tokenDf",
-        sys.env.getOrElse("SPARK_GRAFT_TOKEN_DF", "broadcast")) match {
-      case "window" =>
-        toks.withColumn("df",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("tok")))
-      case "shj" =>
-        toks.join(toks.groupBy("tok").agg(count(lit(1)).as("df")).hint("shuffle_hash"),
-          Seq("tok"))
-      case _ =>
-        toks.join(broadcast(toks.groupBy("tok").agg(count(lit(1)).as("df"))), Seq("tok"))
-    }
-
   def ngramContainmentJoin(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8,
@@ -540,6 +474,14 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
+  /** Exact n-gram Jaccard pairs ≥ threshold: pair join within a block + the
+    * native jaccard expression (one hash-set pass per pair). `blockCol`
+    * bounds the quadratic pair space (all-pairs within a block); None =
+    * global — only sane for small corpora or as the oracle baseline. An
+    * explode-and-count formulation loses here because tiny vocabularies make
+    * shingle collisions dense; with realistic vocabularies both work, and
+    * minhashNearDups is the true scale path either way.
+    */
   def ngramJaccardPairs(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5,

@@ -171,6 +171,12 @@ object DedupIndex {
     ()
   }
 
+  /** Most candidate ids [[probe]] collects to the driver and pushes as an
+    * IN below the merge (~8 B/id of driver memory); past it the probe falls
+    * back to a broadcast semi-join above the read.
+    */
+  private val ProbePushMax = 100000
+
   /** Near-dup pairs (a_id = index doc, b_id = batch doc, jaccard ≥
     * threshold) of `batch` against the table-backed index — same contract
     * as [[Dedup.minhashNearDupsAgainst]], with the corpus side served from
@@ -221,11 +227,10 @@ object DedupIndex {
     // above the read keeps the plan (no pruning, same output). a_ids come
     // from the already-batch-excluded `idx`, so the filtered read can
     // never resurrect an excluded batch id.
-    val pushMax = sys.env.getOrElse("SPARK_GRAFT_PROBE_PUSH_MAX", "100000").toInt
     val candIds = candidates.select(col("a_id")).distinct()
-      .limit(pushMax + 1).collect().map(_.get(0))
+      .limit(ProbePushMax + 1).collect().map(_.get(0))
     val aSh =
-      (if (candIds.nonEmpty && candIds.length <= pushMax)
+      (if (candIds.nonEmpty && candIds.length <= ProbePushMax)
         KeyedTable.readWhereKeys(spark, indexPath, col(idCol).isin(candIds.toSeq: _*))
           .select(col(idCol).as("id"), col(ShCol))
       else

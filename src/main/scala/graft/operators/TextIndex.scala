@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -141,7 +141,7 @@ object TextIndex {
     */
   private def entriesOf(
       docs: DataFrame, idCol: String, textCol: String,
-      groupCol: Option[String] = None): DataFrame = {
+      groupCol: Option[String]): DataFrame = {
     val post0 = Retrieval.tokensWithPos(docs, col(idCol), col(textCol))
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("pos"))
@@ -300,7 +300,7 @@ object TextIndex {
     */
   private def doclenOf(
       t: DataFrame, ids: DataFrame, idCol: String,
-      extra: Seq[String] = Seq.empty): DataFrame =
+      extra: Seq[String]): DataFrame =
     t.filter(col(KindCol) === DoclenKind)
       .select((Seq("id", "terms", "tf") ++ extra).map(col): _*)
       .join(broadcast(ids.select(col(idCol).as("id")).distinct()), Seq("id"), "left_semi")
@@ -502,8 +502,8 @@ object TextIndex {
     */
   private def entriesOfFielded(
       docs: DataFrame, idCol: String, fields: Seq[(String, String)],
-      groupCol: Option[String] = None,
-      posFor: Option[String] = None): DataFrame = {
+      groupCol: Option[String],
+      posFor: Option[String]): DataFrame = {
     val wtok = fields.map { case (f, c) =>
       Retrieval.tokens(docs, col(idCol), col(c)).withColumn("field", lit(f))
     }.reduce(_ unionByName _)
@@ -567,9 +567,9 @@ object TextIndex {
     */
   private def statsRowsFielded(
       spark: SparkSession, n: Long, sums: Seq[(String, Long)],
-      extra: Seq[(String, Long)] = Seq.empty,
-      withGrp: Boolean = false,
-      withPos: Boolean = false): DataFrame = {
+      extra: Seq[(String, Long)],
+      withGrp: Boolean,
+      withPos: Boolean): DataFrame = {
     import spark.implicits._
     val base = (((StatN, n) +: sums.map { case (f, v) => (StatSumDlField + f, v) })
       ++ extra)

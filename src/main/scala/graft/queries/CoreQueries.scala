@@ -1152,7 +1152,7 @@ object CoreQueries {
   private val q45bScaffold = scala.collection.concurrent.TrieMap.empty[String, String]
   private val q45bRun = new java.util.concurrent.atomic.AtomicLong(0L)
   private val q45b: Q = (s, d) => {
-    val tbl = q45bScaffold.getOrElseUpdate(d, {
+    q45bScaffold.getOrElseUpdate(d, {
       val t = freshTableDir("graft-q45b")
       val ord = s.read.parquet(ordersInput(s, d))
       KeyedTable.create(s, t, ord.filter(col("o_orderkey") % 4 =!= 0),

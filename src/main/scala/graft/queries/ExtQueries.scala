@@ -221,7 +221,7 @@ object ExtQueries {
     corpus.join(perDoc, Seq("doc_id"), "left")
       .withColumn("w", split(col("text"), "\\s+"))
       .withColumn("cw", when(col("sp").isNull, col("w")).otherwise(
-        filter(col("w"), (t, i) => !exists(col("sp"), sp =>
+        filter(col("w"), (_, i) => !exists(col("sp"), sp =>
           i + 1 >= sp.getField("span_start") &&
             i + 1 < sp.getField("span_start") + sp.getField("span_len")))))
       .select(col("doc_id"), size(col("cw")).cast(LongType).as("n_clean_tokens"),

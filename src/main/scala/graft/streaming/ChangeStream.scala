@@ -56,7 +56,7 @@ object ChangeStream {
 
   private def checkIdentity(
       fs: FileSystem, checkpointDir: String, identity: String,
-      legacy: Seq[String] = Seq.empty): Unit = {
+      legacy: Seq[String]): Unit = {
     val f = identityFile(checkpointDir)
     def mismatch(stored: String): Nothing =
       throw graft.model.GraftException.config(

@@ -2,12 +2,7 @@ package graft.table
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType

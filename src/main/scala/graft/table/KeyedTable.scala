@@ -1,7 +1,5 @@
 package graft.table
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,7 +54,7 @@ object KeyedTable {
 
     // one grouped agg gives the empty-check, the per-partition counts for
     // the commit log, and the resume comparison base (A1+A3 fused)
-    val partCounts = partitionCounts(spark, input, cfg.partitionFields)
+    val partCounts = partitionCounts(input, cfg.partitionFields)
     val inputCount = partCounts.map(_._2).sum
     if (inputCount == 0L)
       throw GraftException.config("Input DataFrame is empty. Nothing to write.")
@@ -152,7 +150,7 @@ object KeyedTable {
       tableType: TableType = TableType.CopyOnWrite,
       properties: Map[String, String] = Map.empty): Seq[String] = {
     Validate.fieldsInSchema(df.schema, keyFields, precombineField, partitionFields)
-    val partCounts = partitionCounts(spark, df, partitionFields)
+    val partCounts = partitionCounts(df, partitionFields)
     if (partCounts.map(_._2).sum == 0L)
       throw GraftException.config("Input DataFrame is empty. Nothing to write.")
     val ct = CommitLog.newCommitTime()
@@ -338,7 +336,7 @@ object KeyedTable {
       partCounts: Seq[(String, Long)]): Seq[String] = {
     val existingSet = existing.toSet
     val missing = partCounts.map(_._1).filterNot(existingSet)
-    val tableCounts = partitionCounts(spark, read(spark, cfg.tablePath), cfg.partitionFields,
+    val tableCounts = partitionCounts(read(spark, cfg.tablePath), cfg.partitionFields,
       fromPartitionPathCol = true).toMap
     val incomplete = partCounts.collect {
       case (p, n) if existingSet(p) && tableCounts.getOrElse(p, 0L) != n => p
@@ -962,7 +960,7 @@ object KeyedTable {
       .unionByName(updMeta)
     CommitLog.beginInflight(spark, tablePath, ct, operation, touched,
       baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, merged, evolved, partF, touched, ct)
+    val counts = stageAndSwap(spark, tablePath, merged, partF, touched, ct)
     publishRewrite(spark, tablePath, CommitInfo(
       commitTime = ct, operation = operation, tableName = st.latest.tableName,
       tableType = st.latest.tableType, keyFields = st.latest.keyFields,
@@ -1172,7 +1170,7 @@ object KeyedTable {
     val merged = baseRows.join(removeIds, rowId, "left_anti").unionByName(imgMeta)
     CommitLog.beginInflight(spark, tablePath, ct, "merge", touched,
       baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, merged, schema, partF, touched, ct)
+    val counts = stageAndSwap(spark, tablePath, merged, partF, touched, ct)
     publishRewrite(spark, tablePath, CommitInfo(
       commitTime = ct, operation = "merge", tableName = st.latest.tableName,
       tableType = st.latest.tableType, keyFields = keyF,
@@ -1615,8 +1613,7 @@ object KeyedTable {
 
     CommitLog.beginInflight(spark, tablePath, ct, "delete", touched,
       baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, remaining,
-      StructType.fromDDL(st.latest.schemaDdl), partF, touched, ct)
+    val counts = stageAndSwap(spark, tablePath, remaining, partF, touched, ct)
     publishRewrite(spark, tablePath, CommitInfo(
       commitTime = ct, operation = "delete", tableName = st.latest.tableName,
       tableType = st.latest.tableType, keyFields = keyF,
@@ -1655,37 +1652,25 @@ object KeyedTable {
     // standing unpartitioned index tables (dedup/ANN/PQ) are the payoff:
     // every probe between compactions row-group-prunes. Partitioned tables
     // sort within the existing one-shuffle partition clustering (zero new
-    // exchanges); unpartitioned tables range-partition by key (the range
-    // sampler's pass is column-pruned to the key columns).
+    // exchanges); unpartitioned tables range-partition by key. The range
+    // sampler re-executes the merge column-pruned to the key columns (the
+    // anti-join streams base keys, the window sees only contested rows),
+    // which costs less task time than caching the merged frame so sampler
+    // and write share one execution. Sorting costs ~0.1 s wall per
+    // compaction at ×4 over no key layout, bought back by every probe's
+    // row-group pruning (OPTIMIZATION_r15.md O3 and its layout A/B).
     val keyCols = st.latest.keyFields.map(col)
-    // layout strategy knob (measured in CompactProbe; see OPTIMIZATION_r15):
-    //  range   — repartitionByRange on the merged frame; its sampler
-    //            re-executes the merge column-pruned to the key columns
-    //            (the anti-join streams base keys, the window sees only
-    //            contested rows), then the write re-executes it in full
-    //  persist — cache the merged frame so sampler + write share one
-    //            execution, at the cost of materializing full-width rows
-    //  none    — r14 shape: no key layout (probe reads lose row-group
-    //            pruning until the next cluster/optimize pass)
-    val layoutMode = sys.props.getOrElse("graft.compactLayout",
-      sys.env.getOrElse("SPARK_GRAFT_COMPACT_LAYOUT", "range"))
-    val doSort = keyCols.nonEmpty && layoutMode != "none"
-    val cached = if (doSort && layoutMode == "persist" && partF.isEmpty)
-      Some(merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else None
-    val src = cached.getOrElse(merged)
+    val doSort = keyCols.nonEmpty
     val shaped =
       if (!doSort) merged
       else if (partF.isEmpty)
-        src.repartitionByRange(keyCols: _*).sortWithinPartitions(keyCols: _*)
-      else src.repartition(partF.map(col): _*)
+        merged.repartitionByRange(keyCols: _*).sortWithinPartitions(keyCols: _*)
+      else merged.repartition(partF.map(col): _*)
         .sortWithinPartitions(partF.map(col) ++ keyCols: _*)
     CommitLog.beginInflight(spark, tablePath, ct, "compact", touched,
       baseCommits = st.commits.map(_.commitTime))
-    val counts =
-      try stageAndSwap(spark, tablePath, shaped, schema, partF, touched, ct,
-        preShaped = doSort)
-      finally cached.foreach(_.unpersist(blocking = false))
+    val counts = stageAndSwap(spark, tablePath, shaped, partF, touched, ct,
+      preShaped = doSort)
 
     publishRewrite(spark, tablePath, CommitInfo(
       commitTime = ct, operation = "compact", tableName = st.latest.tableName,
@@ -2729,7 +2714,7 @@ object KeyedTable {
     val ct = CommitLog.newCommitTime()
     CommitLog.beginInflight(spark, tablePath, ct, "reclaim", targets,
       baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, rows, newSchema, partF, targets, ct)
+    val counts = stageAndSwap(spark, tablePath, rows, partF, targets, ct)
     // the rewritten partitions are clean by construction; the ddl sheds the
     // columns iff no live file OUTSIDE the rewritten set still carries one
     val fs = CommitLog.fs(spark, tablePath)
@@ -2763,7 +2748,6 @@ object KeyedTable {
       shape: (DataFrame, Seq[String]) => DataFrame): Seq[String] = {
     compact(spark, tablePath)
     val st = CommitLog.requireState(spark, tablePath)
-    val schema = StructType.fromDDL(st.latest.schemaDdl)
     val partF = st.latest.partitionFields
     val ct = CommitLog.newCommitTime()
     val targets = partitions.getOrElse(if (partF.isEmpty) Seq("") else st.nativePartitions)
@@ -2773,7 +2757,7 @@ object KeyedTable {
     val clustered = shape(rows, partF)
     CommitLog.beginInflight(spark, tablePath, ct, "cluster", targets,
       baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, clustered, schema, partF, targets, ct,
+    val counts = stageAndSwap(spark, tablePath, clustered, partF, targets, ct,
       writeOptions = if (maxRecordsPerFile > 0) Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)
         else Map.empty,
       preShaped = true)
@@ -2878,8 +2862,7 @@ object KeyedTable {
     CommitLog.beginInflight(spark, tablePath, ct, "materialize", parts,
       baseCommits = st.commits.map(_.commitTime))
     val slice = readPartitions(spark, tablePath, st, parts) // already carries meta cols
-    stageAndSwap(spark, tablePath, slice, StructType.fromDDL(st.latest.schemaDdl),
-      st.latest.partitionFields, parts, ct)
+    stageAndSwap(spark, tablePath, slice, st.latest.partitionFields, parts, ct)
     publishRewrite(spark, tablePath, CommitInfo(
       commitTime = ct, operation = "materialize", tableName = st.latest.tableName,
       tableType = st.latest.tableType, keyFields = st.latest.keyFields,
@@ -2934,7 +2917,6 @@ object KeyedTable {
       spark: SparkSession,
       tablePath: String,
       df: DataFrame,
-      schema: StructType,
       partF: Seq[String],
       touched: Seq[String],
       ct: String,
@@ -3031,7 +3013,6 @@ object KeyedTable {
 
   /** Per-partition counts as ONE grouped aggregate (A3 fused with A1). */
   private def partitionCounts(
-      spark: SparkSession,
       df: DataFrame,
       partF: Seq[String],
       fromPartitionPathCol: Boolean = false): Seq[(String, Long)] = {

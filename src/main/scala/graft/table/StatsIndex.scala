@@ -272,6 +272,9 @@ object StatsIndex {
       .filter(_._2).map(_._1).distinct().collect().toSet
   }
 
+  /** Footer sets up to this size are read on the driver, not by a job. */
+  private val FooterDriverMax = 32
+
   private[table] def footerRowCounts(
       spark: SparkSession, pairs: Seq[(String, String)]): Map[String, Long] = {
     if (pairs.isEmpty) return Map.empty
@@ -280,8 +283,7 @@ object StatsIndex {
     // here is pure overhead (serialize the whole hadoop conf, schedule
     // tasks, collect) that the q22b driver-gap sampler caught red-handed.
     // Large sets (a bulk rewrite on a remote FS) keep the distributed pass.
-    val driverMax = sys.env.getOrElse("SPARK_GRAFT_FOOTER_DRIVER_MAX", "32").toInt
-    if (pairs.size <= driverMax) {
+    if (pairs.size <= FooterDriverMax) {
       val conf = spark.sparkContext.hadoopConfiguration
       pairs.groupBy(_._1).map { case (key, fs) =>
         key -> fs.map { case (_, f) =>

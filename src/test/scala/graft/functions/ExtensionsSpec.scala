@@ -6,8 +6,6 @@ import graft.SparkTestBase
 import graft.operators.Dedup
 
 class ExtensionsSpec extends SparkTestBase {
-  import spark.implicits._
-
   private lazy val docs = spark.read.parquet(sf("documents"))
 
   test("graft_* SQL functions return exactly what the Column API returns") {

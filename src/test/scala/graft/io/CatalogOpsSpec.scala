@@ -1,7 +1,5 @@
 package graft.io
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkTestBase
 
 /** M1-M3 catalog operators + the check_path_or_table dispatch (app.py:361-370). */

@@ -19,16 +19,29 @@ class OperatorsSpec extends SparkTestBase {
     assert(lsh.nonEmpty) // fixture has planted near-dups
   }
 
+  /** Run `body` with broadcast joins off: the plan the token-df join takes
+    * when the df table outgrows the broadcast cap.
+    */
+  private def withoutBroadcast[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("prefix-filter similarity join equals the quadratic baseline at several thresholds") {
+    def prefix(t: Double) =
+      Dedup.ngramJaccardPrefixJoin(docs, "doc_id", "text", n = 2, threshold = t)
+        .select("a_id", "b_id", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     for (t <- Seq(0.4, 0.6, 0.8)) {
       val quad = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 2, threshold = t)
         .select("a_id", "b_id", "jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pref = Dedup.ngramJaccardPrefixJoin(docs, "doc_id", "text", n = 2, threshold = t)
-        .select("a_id", "b_id", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(pref === quad, s"threshold $t")
+      assert(prefix(t) === quad, s"threshold $t")
       assert(quad.nonEmpty, s"threshold $t should find planted near-dups")
+      if (t == 0.6) assert(withoutBroadcast(prefix(t)) === quad, s"threshold $t, no broadcast")
     }
   }
 
@@ -433,12 +446,15 @@ class OperatorsSpec extends SparkTestBase {
     val snippets = docs.select((col("doc_id") + 200000).as("doc_id"),
       concat_ws(" ", slice(split(col("text"), "\\s+"), 1, 15)).as("text"))
     val all = docs.select("doc_id", "text").unionByName(snippets)
+    def prefix(t: Double) =
+      Dedup.ngramContainmentJoin(all, "doc_id", "text", n = 3, threshold = t)
+        .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     for (t <- Seq(0.7, 0.9)) {
       val quad = Dedup.ngramContainmentPairs(all, "doc_id", "text", n = 3, threshold = t)
         .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val pref = Dedup.ngramContainmentJoin(all, "doc_id", "text", n = 3, threshold = t)
-        .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val pref = prefix(t)
       assert(pref === quad, s"threshold $t")
+      if (t == 0.7) assert(withoutBroadcast(prefix(t)) === quad, s"threshold $t, no broadcast")
       // every planted snippet is contained in its source doc...
       val planted = docs.select("doc_id").collect()
         .map(r => (r.getLong(0) + 200000, r.getLong(0))).toSet

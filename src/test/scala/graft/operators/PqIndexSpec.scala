@@ -196,7 +196,6 @@ class PqIndexSpec extends SparkTestBase {
   test("retrain re-fits the model IN PLACE as one commit: equals a fresh build " +
       "over the stored vectors, history stays asOf-able, m and nlist may change, " +
       "and flat→IVF conversion refuses") {
-    import spark.implicits._
     val idx = s"${tmpDir("pq-retrain")}/idx"
     val corpus = emb.filter(col("vec_id") >= 50)
     val batch = emb.filter(col("vec_id") >= 25 && col("vec_id") < 50)

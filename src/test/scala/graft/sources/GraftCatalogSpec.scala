@@ -122,8 +122,6 @@ class GraftCatalogSpec extends SparkTestBase {
     val corpusTbl = s"$dir/corpus"
     val dedupIdx = s"$dir/dedup"
     val annIdx = s"$dir/ann"
-    val textA = (1 to 30).map(i => s"alpha$i").mkString(" ")
-    val textB = (1 to 30).map(i => s"beta$i").mkString(" ")
     val emb = spark.read.parquet(sf("embeddings"))
     val docs = emb.filter(col("vec_id") >= 25)
       .select(col("vec_id").as("doc_id"), col("embedding"))

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.io.InputStream
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-
-import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 

@@ -8,8 +8,6 @@ import graft.model._
 
 /** Incrementally-maintained aggregate rollup vs full recompute. */
 class IncrementalAggSpec extends SparkTestBase {
-  import spark.implicits._
-
   private val dec = DecimalType(18, 4)
 
   private def ordersIn(outDir: String): String = {

@@ -210,7 +210,7 @@ class PropertiesSpec extends SparkTestBase {
       val base = (0 until 15).map(i => (i.toLong, 0L, s"b$i", s"p${i % 3}"))
       val table = bootstrap(base, tt)
       var pinned = Seq.empty[(String, Seq[(Long, Long, String, String)])]
-      for (step <- 0 until 5) {
+      for (_ <- 0 until 5) {
         // pin a random subset of instants as we go
         if (rnd.nextBoolean()) {
           val ct = CommitLog.commits(spark, table).last.commitTime
