@@ -335,16 +335,6 @@ object SyncRegistry {
     out.result()
   }
 
-  /** Corpus publishes that change no logical rows (or ARE maintenance)
-    * never trigger a sync: their CDC interval is empty by construction —
-    * compaction/clustering/sizing rewrites keep original commit times, and
-    * index sidecar builds touch no data — so pulling it would spend a CDC
-    * read to deliver nothing.
-    */
-  private[graft] val skipOps = Set(
-    "index_stats", "index_bloom", "alter_schema", "compact", "reclaim",
-    "cluster", "materialize")
-
   private val inSync = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
@@ -359,7 +349,9 @@ object SyncRegistry {
   def afterPublish(
       spark: SparkSession, tablePath: String, operation: String,
       props: Map[String, String]): Unit = {
-    if (inSync.get() || skipOps(operation)) return
+    // a publish that changes no logical rows has an empty CDC interval:
+    // pulling it would spend a CDC read to deliver nothing
+    if (inSync.get() || CommitLog.RowNeutralOps(operation)) return
     if (!props.keys.exists(_.startsWith(TableProperties.IndexSyncPrefix))) return
     inSync.set(true)
     try {

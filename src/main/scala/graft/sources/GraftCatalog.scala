@@ -672,7 +672,7 @@ private[sources] object GraftProcedures {
         // read as failed applies
         val commits = graft.table.CommitLog.commits(s, a(0).toString)
         val lag = wm.map(w => commits.count(c =>
-          c.commitTime > w && !graft.operators.SyncRegistry.skipOps(c.operation)))
+          c.commitTime > w && !graft.table.CommitLog.RowNeutralOps(c.operation)))
         val head = s"watermark: ${wm.getOrElse("<none>")}" +
           lag.map(l => s" (lag: $l commit(s) behind tip)").getOrElse("")
         head +: regs.map { case (n, sp) => s"$n: ${sp.describe}" }

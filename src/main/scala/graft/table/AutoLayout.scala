@@ -39,14 +39,6 @@ import org.apache.spark.sql.SparkSession
   */
 private[table] object AutoLayout {
 
-  /** Maintenance / layout operations never count toward the trigger and
-    * never trigger it: they change no logical rows, and `cluster` is the
-    * anchor itself.
-    */
-  private val skipOps = Set(
-    "cluster", "compact", "reclaim", "index_stats", "index_bloom",
-    "alter_schema", "materialize")
-
   private val inLayout = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
@@ -57,7 +49,9 @@ private[table] object AutoLayout {
   def afterPublish(
       spark: SparkSession, tablePath: String, operation: String,
       props: Map[String, String]): Unit = {
-    if (inLayout.get() || skipOps(operation)) return
+    // operations that change no logical rows never trigger the layout (and
+    // never count toward it below); `cluster` is the anchor itself
+    if (inLayout.get() || CommitLog.RowNeutralOps(operation)) return
     val cols = props.get(TableProperties.LayoutAuto).map(csv).getOrElse(Seq.empty)
     if (cols.isEmpty) return
     val parts = props.get(TableProperties.LayoutAutoPartitions).map(csv)
@@ -81,7 +75,7 @@ private[table] object AutoLayout {
         .filter(c => c.operation == "cluster" || c.operation == "bootstrap")
         .maxBy(_.commitTime)
       val pending = cs
-        .filter(c => c.commitTime > anchorC.commitTime && !skipOps(c.operation))
+        .filter(c => c.commitTime > anchorC.commitTime && !CommitLog.RowNeutralOps(c.operation))
         .filter(c => parts.forall(ps => c.partitions.exists(p => ps.contains(p.path))))
       // rows a commit wrote into the TARGET partitions — the metadata proxy
       // the ratio is computed from

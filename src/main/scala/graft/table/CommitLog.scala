@@ -27,6 +27,16 @@ import graft.model.GraftException
 object CommitLog {
   val LogDirName = ".graft"
 
+  /** Operations that change no logical rows: compaction, clustering and
+    * reclamation rewrites keep every row's commit time, materialize copies
+    * rows as they are, and schema/index-sidecar commits touch no data. Their
+    * CDC interval is empty by construction, so the maintenance hooks that
+    * react to new rows (index sync, layout, retrain advice) skip them.
+    */
+  val RowNeutralOps = Set(
+    "index_stats", "index_bloom", "alter_schema", "compact", "reclaim",
+    "cluster", "materialize")
+
   final case class PartitionEntry(path: String, mode: String, recordCount: Long)
 
   /** Metadata-only DROP/RENAME column state (T39). `schemaDdl` always

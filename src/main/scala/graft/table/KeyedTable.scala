@@ -54,7 +54,8 @@ object KeyedTable {
 
     // one grouped agg gives the empty-check, the per-partition counts for
     // the commit log, and the resume comparison base (A1+A3 fused)
-    val partCounts = partitionCounts(input, cfg.partitionFields)
+    val partCounts = partitionCounts(
+      input.withColumn(MetaColumns.PartitionPath, ppCol(cfg.partitionFields)), cfg.partitionFields)
     val inputCount = partCounts.map(_._2).sum
     if (inputCount == 0L)
       throw GraftException.config("Input DataFrame is empty. Nothing to write.")
@@ -150,7 +151,8 @@ object KeyedTable {
       tableType: TableType = TableType.CopyOnWrite,
       properties: Map[String, String] = Map.empty): Seq[String] = {
     Validate.fieldsInSchema(df.schema, keyFields, precombineField, partitionFields)
-    val partCounts = partitionCounts(df, partitionFields)
+    val partCounts = partitionCounts(
+      df.withColumn(MetaColumns.PartitionPath, ppCol(partitionFields)), partitionFields)
     if (partCounts.map(_._2).sum == 0L)
       throw GraftException.config("Input DataFrame is empty. Nothing to write.")
     val ct = CommitLog.newCommitTime()
@@ -336,8 +338,7 @@ object KeyedTable {
       partCounts: Seq[(String, Long)]): Seq[String] = {
     val existingSet = existing.toSet
     val missing = partCounts.map(_._1).filterNot(existingSet)
-    val tableCounts = partitionCounts(read(spark, cfg.tablePath), cfg.partitionFields,
-      fromPartitionPathCol = true).toMap
+    val tableCounts = partitionCounts(read(spark, cfg.tablePath), cfg.partitionFields).toMap
     val incomplete = partCounts.collect {
       case (p, n) if existingSet(p) && tableCounts.getOrElse(p, 0L) != n => p
     }
@@ -661,21 +662,13 @@ object KeyedTable {
     val fs = CommitLog.fs(spark, tablePath)
     val deltaOps = Set("delta_commit", "delete", "merge", "upsert_global")
     val emptyOk = deltaOps ++ Set("alter_schema", "index_stats", "index_bloom")
-    def resolveDeltaDir(c: CommitInfo): Option[String] =
-      if (live.contains(c.commitTime)) Some(Deltas.dir(tablePath, c.commitTime).toString)
-      else st.commits.filter(x => x.operation == "compact" && x.commitTime > c.commitTime)
-        .collectFirst {
-          case x if Archive.archivedDeltaCommits(fs, tablePath, x.commitTime)
-            .contains(c.commitTime) =>
-            new Path(Archive.deltasDir(tablePath, x.commitTime), c.commitTime).toString
-        }
     val resolved: Seq[Option[Option[String]]] = interval.map { c =>
       // None = fall back; Some(None) = admitted, no dir; Some(Some(d)) = batch dir
       if (c.partitions.isEmpty)
         if (emptyOk(c.operation)) Some(None) else None
       else if (c.operation == "compact" || c.operation == "cluster") Some(None)
       else if (deltaOps(c.operation) && c.partitions.forall(_.mode == "delta"))
-        resolveDeltaDir(c).map(d => Some(d))
+        deltaBatchDir(fs, tablePath, st, live, c.commitTime).map(d => Some(d))
       else None
     }
     val deltaOnly = st.latest.tableType == TableType.MergeOnRead.name &&
@@ -698,6 +691,20 @@ object KeyedTable {
     snapshot(spark, tablePath, st, restrict)
       .filter(col(MetaColumns.CommitTime) > sinceCommitTime)
   }
+
+  /** The directory of committed delta batch `ct`: live, else stashed under
+    * the archive of the first later compaction that absorbed it. None once
+    * archive retention has cleaned it.
+    */
+  private def deltaBatchDir(
+      fs: org.apache.hadoop.fs.FileSystem, tablePath: String, st: TableState,
+      live: Set[String], ct: String): Option[String] =
+    if (live.contains(ct)) Some(Deltas.dir(tablePath, ct).toString)
+    else st.commits.filter(x => x.operation == "compact" && x.commitTime > ct)
+      .collectFirst {
+        case x if Archive.archivedDeltaCommits(fs, tablePath, x.commitTime).contains(ct) =>
+          new Path(Archive.deltasDir(tablePath, x.commitTime), ct).toString
+      }
 
   /** Column carried by [[readChanges]]: 'upsert' | 'delete'. */
   val ChangeOp = "_change_op"
@@ -744,14 +751,7 @@ object KeyedTable {
           c.operation != "delete_partition"
         if (isMorBatch) {
           // tombstone rows live in the commit's delta batch
-          val dir =
-            if (live.contains(c.commitTime)) Some(Deltas.dir(tablePath, c.commitTime).toString)
-            else st.commits.filter(x => x.operation == "compact" && x.commitTime > c.commitTime)
-              .collectFirst {
-                case x if Archive.archivedDeltaCommits(fs, tablePath, x.commitTime).contains(c.commitTime) =>
-                  new Path(Archive.deltasDir(tablePath, x.commitTime), c.commitTime).toString
-              }
-          dir match {
+          deltaBatchDir(fs, tablePath, st, live, c.commitTime) match {
             case Some(d) => Some(Deltas.readDirs(spark, schema, Seq(d))
               .filter(col(Deltas.DeletedCol)).select(cols: _*))
             case None if c.operation == "delta_commit" =>
@@ -833,46 +833,15 @@ object KeyedTable {
         updMeta.select(keyF.map(col) :+ col(MetaColumns.PartitionPath).as("__new_pp"): _*), keyF)
       .filter(col("__old_pp") =!= col("__new_pp"))
       .persist()
-    val movedPP = moved.select("__old_pp").distinct()
-      .collect().map(_.getString(0)).toSeq // bounded by #partitions
-    val newPP = updMeta.select(MetaColumns.PartitionPath).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val touched = (movedPP ++ newPP).distinct.sorted
-
-    if (st.latest.tableType == TableType.MergeOnRead.name) {
-      // one delta batch: tombstones at the old locations + the new images
-      val dataSchema = StructType(evolved.filterNot(f => MetaColumns.all.contains(f.name)))
-      val tombMeta = MetaColumns.withMeta(
-          padToSchema(moved.select((keyF ++ partF).map(col): _*), dataSchema),
-          keyF, partF, ct)
-        .select(evolved.fieldNames.map(col).toSeq: _*)
-        .withColumn(Deltas.DeletedCol, lit(true))
-      val rows = updMeta.withColumn(Deltas.DeletedCol, lit(false)).unionByName(tombMeta)
-      CommitLog.beginInflight(spark, tablePath, ct, "upsert_global", touched,
-        baseCommits = st.commits.map(_.commitTime))
-      Deltas.write(rows, tablePath, ct, partF)
-      moved.unpersist()
-      val counts = partitionCountsOf(
-        spark.read.schema(Deltas.schemaOf(evolved)).parquet(Deltas.dir(tablePath, ct).toString), partF)
-      // committed under its own operation name (not plain delta_commit):
-      // readChanges scans only delete/upsert_global batches for tombstones,
-      // so ordinary upsert batches never gate the CDC retention horizon
-      publishRewrite(spark, tablePath, CommitInfo(
-        commitTime = ct, operation = "upsert_global", tableName = st.latest.tableName,
-        tableType = st.latest.tableType, keyFields = keyF, precombineField = precombine,
-        partitionFields = partF,
-        partitions = counts.keys.toSeq.sorted.map(p => PartitionEntry(p, "delta", counts(p))),
-        recordCount = counts.values.sum, schemaDdl = evolved.toDDL, sourcePath = None),
-        baseInstant = Some(st.latest.commitTime))
-      return counts.keys.toSeq.sorted
-    }
-
-    // key-ONLY anti-join: the global index removes the key wherever it
-    // lives. The distinct operation name lets readChanges surface the
-    // old-partition removals of a move as delete events (before/after diff
-    // on the archived pre-image, same machinery as COW deletes).
-    val out = cowRewrite(spark, tablePath, st, updMeta, evolved, touched, ct,
-      antiJoinKeys = keyF, operation = "upsert_global")
+    // MOR: one batch of the new images + tombstones at the old locations.
+    // COW: the key-ONLY anti-join removes the key wherever it lives; the
+    // moved rows' old partitions join the rewrite. Committed under its own
+    // operation name (not upsert/delta_commit): readChanges surfaces the
+    // old-partition removals of a move as delete events, and ordinary
+    // upsert batches never gate the CDC retention horizon.
+    val out = writeRows(spark, tablePath, st, ct, "upsert_global", evolved,
+      images = Some(updMeta), removed = Some(moved.select((keyF ++ partF).map(col): _*)),
+      antiJoinKeys = keyF)
     moved.unpersist()
     out
   }
@@ -938,38 +907,118 @@ object KeyedTable {
       if (d.columns.contains(f.name)) d else d.withColumn(f.name, lit(null).cast(f.dataType))
     }.select(schema.fieldNames.map(col).toSeq: _*)
 
-  /** The shared COW rewrite tail: read + pad the touched partitions,
-    * anti-join the batch on `antiJoinKeys` (key+partition under the default
-    * non-global index; key alone under the global index, which is exactly
-    * what removes a moved row from its old partition), union the batch,
-    * stage + swap, commit. Returns the touched partitions.
+  /** Row-level write core behind [[upsert]], [[delete]], [[mergeRows]] and
+    * [[upsertGlobal]]: `images` (meta-stamped full rows in `schema` order)
+    * replace or insert rows, `removed` (key + partition columns) names rows
+    * to delete. MOR: one delta batch of the images plus a tombstone per
+    * removed row. COW: one rewrite of the touched partitions — base rows
+    * anti-joined on `antiJoinKeys` against the images and removed rows
+    * (key + partition under the default non-global index; key alone under
+    * the global index, which is exactly what removes a moved row from its
+    * old partition), plus the images. Returns the touched partitions.
     */
-  private def cowRewrite(
+  private def writeRows(
       spark: SparkSession,
       tablePath: String,
       st: TableState,
-      updMeta: DataFrame,
-      evolved: StructType,
-      touched: Seq[String],
       ct: String,
-      antiJoinKeys: Seq[String],
-      operation: String): Seq[String] = {
+      operation: String,
+      schema: StructType,
+      images: Option[DataFrame],
+      removed: Option[DataFrame],
+      antiJoinKeys: Seq[String]): Seq[String] = {
+    val keyF = st.latest.keyFields
     val partF = st.latest.partitionFields
-    val base = padToSchema(readPartitions(spark, tablePath, st, touched), evolved)
-    val merged = base.join(updMeta.select(antiJoinKeys.map(col): _*), antiJoinKeys, "left_anti")
-      .unionByName(updMeta)
-    CommitLog.beginInflight(spark, tablePath, ct, operation, touched,
-      baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, merged, partF, touched, ct)
-    publishRewrite(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = operation, tableName = st.latest.tableName,
-      tableType = st.latest.tableType, keyFields = st.latest.keyFields,
-      precombineField = st.latest.precombineField, partitionFields = partF,
-      partitions = touched.map(p => PartitionEntry(p, "native", counts.getOrElse(p, 0L))),
-      recordCount = counts.values.sum, schemaDdl = evolved.toDDL, sourcePath = None),
-      baseInstant = Some(st.latest.commitTime))
+    if (st.latest.tableType == TableType.MergeOnRead.name) {
+      val dataSchema = StructType(schema.filterNot(f => MetaColumns.all.contains(f.name)))
+      val tombs = removed.map(r => MetaColumns.withMeta(padToSchema(r, dataSchema), keyF, partF, ct)
+        .select(schema.fieldNames.map(col).toSeq: _*)
+        .withColumn(Deltas.DeletedCol, lit(true)))
+      val rows = (images.map(_.withColumn(Deltas.DeletedCol, lit(false))) ++ tombs)
+        .reduce(_ unionByName _)
+      return deltaBatchCommit(spark, tablePath, st, ct, operation, rows, schema)
+    }
+    val touched = touchedPartitions(partF, (images ++ removed).toSeq: _*)
+    val ids = (images ++ removed).map(_.select(antiJoinKeys.map(col): _*)).reduce(_ unionByName _)
+    // removed rows may repeat (a delete batch naming a row twice)
+    val kept = padToSchema(readPartitions(spark, tablePath, st, touched), schema)
+      .join(if (removed.isEmpty) ids else ids.distinct(), antiJoinKeys, "left_anti")
+    rewriteCommit(spark, tablePath, st, ct, operation,
+      images.fold(kept)(kept.unionByName), touched, schema.toDDL)
     touched
   }
+
+  /** The rewrite tail every partition-replacing write publishes through (COW
+    * row writes, compaction, clustering): inflight marker, stage + swap
+    * `rows` into `targets`, publish with the swapped-in row counts.
+    */
+  private def rewriteCommit(
+      spark: SparkSession,
+      tablePath: String,
+      st: TableState,
+      ct: String,
+      operation: String,
+      rows: DataFrame,
+      targets: Seq[String],
+      schemaDdl: String,
+      writeOptions: Map[String, String] = Map.empty,
+      preShaped: Boolean = false): Unit = {
+    CommitLog.beginInflight(spark, tablePath, ct, operation, targets,
+      baseCommits = st.commits.map(_.commitTime))
+    val counts = stageAndSwap(spark, tablePath, rows, st.latest.partitionFields, targets, ct,
+      writeOptions, preShaped)
+    publishRewrite(spark, tablePath, st, commitOf(st, ct, operation,
+      targets.map(p => PartitionEntry(p, "native", counts.getOrElse(p, 0L))), schemaDdl))
+  }
+
+  /** The delta-batch tail every MOR row write publishes through: land
+    * `rows` as one delta batch under `.graft/deltas/<ct>/` — no base file is
+    * read or rewritten, so a write costs O(|batch|) regardless of table
+    * size; readers merge it ([[Deltas.merge]]) and [[compact]] folds it into
+    * base files. Touched partitions aren't known until the delta files
+    * exist, so the inflight marker records only the instant and operation;
+    * publish validates the real paths, and a losing publish deletes the
+    * batch ([[publishRewrite]]). Returns the touched partitions.
+    */
+  private def deltaBatchCommit(
+      spark: SparkSession,
+      tablePath: String,
+      st: TableState,
+      ct: String,
+      operation: String,
+      rows: DataFrame,
+      schema: StructType): Seq[String] = {
+    CommitLog.beginInflight(spark, tablePath, ct, operation, Seq.empty,
+      baseCommits = st.commits.map(_.commitTime))
+    val counts = writeDeltaCounted(spark, rows, tablePath, ct, st.latest.partitionFields, schema)
+    publishRewrite(spark, tablePath, st, commitOf(st, ct, operation,
+      counts.map { case (p, n) => PartitionEntry(p, "delta", n) }, schema.toDDL))
+    counts.map(_._1)
+  }
+
+  /** A commit of `operation` at `ct` over `entries`, every other field
+    * taken from the base state `st`.
+    */
+  private def commitOf(
+      st: TableState,
+      ct: String,
+      operation: String,
+      entries: Seq[PartitionEntry],
+      schemaDdl: String): CommitInfo =
+    CommitInfo(
+      commitTime = ct, operation = operation, tableName = st.latest.tableName,
+      tableType = st.latest.tableType, keyFields = st.latest.keyFields,
+      precombineField = st.latest.precombineField, partitionFields = st.latest.partitionFields,
+      partitions = entries, recordCount = entries.map(_.recordCount).sum,
+      schemaDdl = schemaDdl, sourcePath = None)
+
+  /** The sorted partition paths the rows of `frames` belong to, from one
+    * distinct collect bounded by #touched partitions ("" when unpartitioned).
+    */
+  private def touchedPartitions(partF: Seq[String], frames: DataFrame*): Seq[String] =
+    if (partF.isEmpty) Seq("")
+    else frames.map(_.select(ppCol(partF).as("__pp"))).reduce(_ unionByName _).distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
 
   // ------------------------------------------------------ incremental write
 
@@ -986,30 +1035,22 @@ object KeyedTable {
     */
   def upsert(spark: SparkSession, tablePath: String, updates: DataFrame): Seq[String] = {
     val st = CommitLog.requireState(spark, tablePath)
-    val phys = toPhysical(st.columnMapping, updates)
-    if (st.latest.tableType == TableType.MergeOnRead.name)
-      return deltaCommit(spark, tablePath, st, phys, delete = false)
     val keyF = st.latest.keyFields
     val partF = st.latest.partitionFields
-    val precombine = st.latest.precombineField
     val ct = CommitLog.newCommitTime()
 
-    val (evolved, padded) = evolveSchema(st, phys)
-    val updDeduped = Upsert.dedupByKey(padded, keyF, precombine, partF)
+    val (evolved, padded) = evolveSchema(st, toPhysical(st.columnMapping, updates))
+    val updDeduped = Upsert.dedupByKey(padded, keyF, st.latest.precombineField, partF)
     val updMeta = MetaColumns.withMeta(updDeduped, keyF, partF, ct)
       .select(evolved.fieldNames.map(col).toSeq: _*)
-
-    val touched: Seq[String] =
-      if (partF.isEmpty) Seq("")
-      else updMeta.select(MetaColumns.PartitionPath).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted // bounded by #touched partitions
 
     // anti-join on key AND partition columns: under the non-global index a
     // key is unique per partition, so a batch inserting key k into partition
     // B must not displace the base row (k, A) — matching delete() and
     // Deltas.merge, which already scope keys by partition path
-    cowRewrite(spark, tablePath, st, updMeta, evolved, touched, ct,
-      antiJoinKeys = keyF ++ partF, operation = "upsert")
+    writeRows(spark, tablePath, st, ct,
+      if (st.latest.tableType == TableType.MergeOnRead.name) "delta_commit" else "upsert",
+      evolved, images = Some(updMeta), removed = None, antiJoinKeys = keyF ++ partF)
   }
 
   /** Partial-update upsert (Hudi `OverwriteNonDefaultsWithLatestAvroPayload`
@@ -1054,10 +1095,7 @@ object KeyedTable {
     }.select(dataCols.map(col): _*)
     val batch = Upsert.dedupByKey(padded, keyF, precombine, partF)
 
-    val touched: Seq[String] =
-      if (partF.isEmpty) Seq("")
-      else batch.select(ppCol(partF).as("__pp")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted // bounded by #touched partitions
+    val touched = touchedPartitions(partF, batch)
 
     val baseSel = joinKeys.map(col) ++
       dataCols.filterNot(joinKeys.contains).map(c => col(c).as(s"__b_$c"))
@@ -1139,46 +1177,8 @@ object KeyedTable {
     val ct = CommitLog.newCommitTime()
     val imgMeta = MetaColumns.withMeta(img, keyF, partF, ct)
       .select(schema.fieldNames.map(col).toSeq: _*)
-
-    if (st.latest.tableType == TableType.MergeOnRead.name) {
-      // one delta batch: tombstones + images, all under one instant
-      val tombMeta = MetaColumns.withMeta(padToSchema(dels, dataSchema), keyF, partF, ct)
-        .select(schema.fieldNames.map(col).toSeq: _*)
-        .withColumn(Deltas.DeletedCol, lit(true))
-      val rows = imgMeta.withColumn(Deltas.DeletedCol, lit(false)).unionByName(tombMeta)
-      CommitLog.beginInflight(spark, tablePath, ct, "merge", Seq.empty,
-        baseCommits = st.commits.map(_.commitTime))
-      val counts = writeDeltaCounted(spark, rows, tablePath, ct, partF, schema)
-      val touched = counts.keys.toSeq.sorted
-      publishRewrite(spark, tablePath, CommitInfo(
-        commitTime = ct, operation = "merge",
-        tableName = st.latest.tableName, tableType = st.latest.tableType,
-        keyFields = keyF, precombineField = precombine, partitionFields = partF,
-        partitions = touched.map(p => PartitionEntry(p, "delta", counts.getOrElse(p, 0L))),
-        recordCount = counts.values.sum, schemaDdl = st.latest.schemaDdl, sourcePath = None),
-        baseInstant = Some(st.latest.commitTime))
-      return touched
-    }
-
-    val touched: Seq[String] =
-      if (partF.isEmpty) Seq("")
-      else imgMeta.select(MetaColumns.PartitionPath)
-        .unionByName(dels.select(ppCol(partF).as(MetaColumns.PartitionPath)))
-        .distinct().collect().map(_.getString(0)).toSeq.sorted // bounded by #touched partitions
-    val baseRows = padToSchema(readPartitions(spark, tablePath, st, touched), schema)
-    val removeIds = img.select(rowId.map(col): _*).unionByName(dels).distinct()
-    val merged = baseRows.join(removeIds, rowId, "left_anti").unionByName(imgMeta)
-    CommitLog.beginInflight(spark, tablePath, ct, "merge", touched,
-      baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, merged, partF, touched, ct)
-    publishRewrite(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = "merge", tableName = st.latest.tableName,
-      tableType = st.latest.tableType, keyFields = keyF,
-      precombineField = precombine, partitionFields = partF,
-      partitions = touched.map(p => PartitionEntry(p, "native", counts.getOrElse(p, 0L))),
-      recordCount = counts.values.sum, schemaDdl = st.latest.schemaDdl, sourcePath = None),
-      baseInstant = Some(st.latest.commitTime))
-    touched
+    writeRows(spark, tablePath, st, ct, "merge", schema,
+      images = Some(imgMeta), removed = Some(dels), antiJoinKeys = rowId)
   }
 
   /** Predicate delete (SQL `DELETE FROM ... WHERE` semantics): remove every
@@ -1506,11 +1506,6 @@ object KeyedTable {
       baseInstant = Some(st.latest.commitTime))
   }
 
-  /** MOR write path: land the batch as a partitioned delta under
-    * `.graft/deltas/<commit>/` — no base file is read or rewritten, so a
-    * write costs O(|batch|) regardless of table size. Readers merge
-    * ([[Deltas.merge]]); [[compact]] folds deltas back into base files.
-    */
   /** Write one delta batch and return its per-partition counts for the
     * commit log. Unpartitioned tables need only the batch total, which an
     * `observe` collects from the WRITE JOB itself — the former read-back
@@ -1527,65 +1522,13 @@ object KeyedTable {
       tablePath: String,
       ct: String,
       partF: Seq[String],
-      evolved: StructType): Map[String, Long] =
-    if (partF.isEmpty) {
-      val obs = org.apache.spark.sql.Observation()
-      Deltas.write(rows.observe(obs, count(lit(1)).as("n")), tablePath, ct, partF)
-      Map("" -> obs.get("n").asInstanceOf[Long])
-    } else {
-      Deltas.write(rows, tablePath, ct, partF)
-      partitionCountsOf(
-        spark.read.schema(Deltas.schemaOf(evolved)).parquet(Deltas.dir(tablePath, ct).toString), partF)
-    }
-
-  private def deltaCommit(
-      spark: SparkSession,
-      tablePath: String,
-      st: TableState,
-      batch: DataFrame,
-      delete: Boolean): Seq[String] = {
-    val keyF = st.latest.keyFields
-    val partF = st.latest.partitionFields
-    val precombine = st.latest.precombineField
-    val ct = CommitLog.newCommitTime()
-    val tableSchema = StructType.fromDDL(st.latest.schemaDdl)
-
-    // deletes carry only key+partition columns (never evolve the schema);
-    // upserts may add columns. Either way rows are padded/aligned to one
-    // layout so all delta files of a table share it.
-    val input =
-      if (delete) batch.select(batch.columns
-        .filter(c => tableSchema.fieldNames.contains(c)).map(col).toSeq: _*)
-      else batch
-    val (evolved, padded0) = evolveSchema(st, input)
-    val padded = if (delete) padded0 else Upsert.dedupByKey(padded0, keyF, precombine, partF)
-    val rows = MetaColumns.withMeta(padded, keyF, partF, ct)
-      .withColumn(Deltas.DeletedCol, lit(delete))
-      .select(evolved.fieldNames.map(col).toSeq :+ col(Deltas.DeletedCol): _*)
-
-    // touched partitions aren't known until the delta files exist; the
-    // marker records the instant + operation, publish validates real paths
-    CommitLog.beginInflight(spark, tablePath, ct,
-      if (delete) "delete" else "delta_commit", Seq.empty,
-      baseCommits = st.commits.map(_.commitTime))
-    val counts = writeDeltaCounted(spark, rows, tablePath, ct, partF, evolved)
-    val touched = counts.keys.toSeq.sorted
-    try CommitLog.write(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = if (delete) "delete" else "delta_commit",
-      tableName = st.latest.tableName, tableType = st.latest.tableType,
-      keyFields = keyF, precombineField = precombine, partitionFields = partF,
-      partitions = touched.map(p => PartitionEntry(p, "delta", counts.getOrElse(p, 0L))),
-      recordCount = counts.values.sum, schemaDdl = evolved.toDDL, sourcePath = None),
-      baseInstant = Some(st.latest.commitTime))
-    catch {
-      // readers only consult committed delta batches, so the orphan dir is
-      // invisible either way — but the losing writer cleans up after itself
-      // instead of waiting for an fsck sweep
-      case e: CommitConflictException =>
-        CommitLog.fs(spark, tablePath).delete(Deltas.dir(tablePath, ct), true)
-        throw e
-    }
-    touched
+      schema: StructType): Seq[(String, Long)] = {
+    val obs = org.apache.spark.sql.Observation()
+    Deltas.write(if (partF.isEmpty) rows.observe(obs, count(lit(1)).as("n")) else rows,
+      tablePath, ct, partF)
+    if (partF.isEmpty) Seq("" -> obs.get("n").asInstanceOf[Long])
+    else partitionCounts(
+      spark.read.schema(Deltas.schemaOf(schema)).parquet(Deltas.dir(tablePath, ct).toString), partF)
   }
 
   /** Hudi `delete` operation. `keys` must carry the key columns and (for
@@ -1596,32 +1539,18 @@ object KeyedTable {
     */
   def delete(spark: SparkSession, tablePath: String, keys: DataFrame): Seq[String] = {
     val st = CommitLog.requireState(spark, tablePath)
-    if (st.latest.tableType == TableType.MergeOnRead.name)
-      return deltaCommit(spark, tablePath, st, keys, delete = true)
-    val keyF = st.latest.keyFields
-    val partF = st.latest.partitionFields
     val ct = CommitLog.newCommitTime()
-
-    val touched: Seq[String] =
-      if (partF.isEmpty) Seq("")
-      else keys.select(ppCol(partF).as("__pp")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted // bounded by #touched partitions
-
-    val base = readPartitions(spark, tablePath, st, touched)
-    val remaining = base.join(
-      keys.select((keyF ++ partF).map(col): _*).distinct(), keyF ++ partF, "left_anti")
-
-    CommitLog.beginInflight(spark, tablePath, ct, "delete", touched,
-      baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, remaining, partF, touched, ct)
-    publishRewrite(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = "delete", tableName = st.latest.tableName,
-      tableType = st.latest.tableType, keyFields = keyF,
-      precombineField = st.latest.precombineField, partitionFields = partF,
-      partitions = touched.map(p => PartitionEntry(p, "native", counts.getOrElse(p, 0L))),
-      recordCount = counts.values.sum, schemaDdl = st.latest.schemaDdl, sourcePath = None),
-      baseInstant = Some(st.latest.commitTime))
-    touched
+    val tableSchema = StructType.fromDDL(st.latest.schemaDdl)
+    // MOR tombstones are full delta rows: the keys are coerced to the
+    // table's types and null-padded to its layout, so all delta files of a
+    // table share it (a delete never evolves the schema)
+    val (schema, ids) =
+      if (st.latest.tableType == TableType.MergeOnRead.name)
+        evolveSchema(st, keys.select(keys.columns
+          .filter(c => tableSchema.fieldNames.contains(c)).map(col).toSeq: _*))
+      else (tableSchema, keys)
+    writeRows(spark, tablePath, st, ct, "delete", schema, images = None, removed = Some(ids),
+      antiJoinKeys = st.latest.keyFields ++ st.latest.partitionFields)
   }
 
   /** MOR compaction: fold every live delta batch into the base files of the
@@ -1667,18 +1596,8 @@ object KeyedTable {
         merged.repartitionByRange(keyCols: _*).sortWithinPartitions(keyCols: _*)
       else merged.repartition(partF.map(col): _*)
         .sortWithinPartitions(partF.map(col) ++ keyCols: _*)
-    CommitLog.beginInflight(spark, tablePath, ct, "compact", touched,
-      baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, shaped, partF, touched, ct,
+    rewriteCommit(spark, tablePath, st, ct, "compact", shaped, touched, st.latest.schemaDdl,
       preShaped = doSort)
-
-    publishRewrite(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = "compact", tableName = st.latest.tableName,
-      tableType = st.latest.tableType, keyFields = st.latest.keyFields,
-      precombineField = st.latest.precombineField, partitionFields = partF,
-      partitions = touched.map(p => PartitionEntry(p, "native", counts.getOrElse(p, 0L))),
-      recordCount = counts.values.sum, schemaDdl = st.latest.schemaDdl, sourcePath = None),
-      baseInstant = Some(st.latest.commitTime))
 
     // absorbed delta batches move into this compaction's archive (not
     // deleted): readAsOf before the compaction re-merges them, and rolling
@@ -1869,9 +1788,8 @@ object KeyedTable {
     * fsck remains the backstop for writers that die without reaching this.
     */
   private def publishRewrite(
-      spark: SparkSession, tablePath: String, info: CommitInfo,
-      baseInstant: Option[String]): Unit =
-    try CommitLog.write(spark, tablePath, info, baseInstant)
+      spark: SparkSession, tablePath: String, st: TableState, info: CommitInfo): Unit =
+    try CommitLog.write(spark, tablePath, info, Some(st.latest.commitTime))
     catch {
       case e: CommitConflictException =>
         val fs = CommitLog.fs(spark, tablePath)
@@ -1881,8 +1799,8 @@ object KeyedTable {
         if (Archive.exists(fs, tablePath, info.commitTime))
           undoAbortedRewrite(spark, tablePath,
             CommitLog.requireState(spark, tablePath), info.commitTime)
-        // a MOR global-upsert conflict instead leaves its (uncommitted,
-        // reader-invisible) delta batch behind — clean that up too
+        // a MOR delta-batch conflict instead leaves its (uncommitted,
+        // reader-invisible) batch behind — clean that up too
         fs.delete(Deltas.dir(tablePath, info.commitTime), true)
         throw e
     }
@@ -2151,34 +2069,21 @@ object KeyedTable {
     val schema = StructType.fromDDL(st.latest.schemaDdl)
     val partF = st.latest.partitionFields
     val cols = schema.fieldNames.map(col).toSeq
-    def firstRewriteAfter(p: String): Option[CommitInfo] =
-      later.find(c => RewriteOps(c.operation) &&
-        c.partitions.exists(e => e.path == p && (e.mode == "native" || e.mode == "dropped")))
-    def retentionError(p: String, ct: String) = GraftException.config(
-      s"Cannot read as of $asOf: pre-image of partition '$p' (archived by commit $ct) " +
-        "has been cleaned — archive retention exceeded.")
+    val cannot = s"Cannot read as of $asOf"
 
     val parts = Seq.newBuilder[DataFrame]
     if (partF.isEmpty) {
       if (st.nativePartitions.nonEmpty) {
-        val root = firstRewriteAfter("") match {
-          case Some(c) =>
-            val d = Archive.dataDir(tablePath, c.commitTime)
-            if (!fs.exists(d)) throw retentionError("", c.commitTime)
-            d.toString
-          case None => tablePath
-        }
+        val root = preImageRoot(fs, tablePath, later, "", cannot)
+          .map(_.toString).getOrElse(tablePath)
         parts += spark.read.schema(schema).parquet(root).select(cols: _*)
       }
     } else {
       // group partitions by the root holding their asOf state → one pruned
       // multi-dir scan per root
       val byRoot = st.nativePartitions.flatMap { p =>
-        firstRewriteAfter(p) match {
-          case Some(c) =>
-            val d = new Path(Archive.dataDir(tablePath, c.commitTime), PathCodec.escape(p))
-            if (!fs.exists(d)) throw retentionError(p, c.commitTime)
-            Some(Archive.dataDir(tablePath, c.commitTime).toString -> p)
+        preImageRoot(fs, tablePath, later, p, cannot) match {
+          case Some(root) => Some(root.toString -> p)
           case None =>
             // directory truth, like readBase: an out-of-band-deleted dir is
             // a missing partition, not an error
@@ -2251,12 +2156,6 @@ object KeyedTable {
         "n_partitions", "partition_rows")
   }
 
-  /** Hudi-cleaner analogue: keep the pre-images of the newest `retainLast`
-    * archived rewrite commits, drop older ones (bounding archive storage to
-    * retainLast × replaced-partition data). readAsOf / rollback past the
-    * horizon fail explicitly. Auto-run inline after every rewrite commit,
-    * like Hudi's inline cleaner. Returns the cleaned commit times.
-    */
   /** Commit operations that replace partition data through stageAndSwap and
     * therefore archive a pre-image — the commits time travel, rollback, and
     * savepoint retention reason about.
@@ -2264,7 +2163,34 @@ object KeyedTable {
   private val RewriteOps = Set("upsert", "upsert_global", "merge", "delete", "compact",
     "cluster", "materialize", "delete_partition", "reclaim")
 
+  /** The archive data root holding partition `p` as it stood before the
+    * commits `later`: the pre-image of the FIRST of them that replaced or
+    * dropped `p`. None when none did (the live dir still holds that state).
+    * Throws when archive retention has cleaned the pre-image; `cannot`
+    * opens the message.
+    */
+  private def preImageRoot(
+      fs: org.apache.hadoop.fs.FileSystem, tablePath: String, later: Seq[CommitInfo],
+      p: String, cannot: String): Option[Path] =
+    later.find(c => RewriteOps(c.operation) &&
+      c.partitions.exists(e => e.path == p && (e.mode == "native" || e.mode == "dropped")))
+      .map { c =>
+        val root = Archive.dataDir(tablePath, c.commitTime)
+        if (!fs.exists(if (p.isEmpty) root else new Path(root, PathCodec.escape(p))))
+          throw GraftException.config(
+            s"$cannot: pre-image of partition '$p' (archived by commit ${c.commitTime}) " +
+              "has been cleaned — archive retention exceeded.")
+        root
+      }
+
   val ArchiveRetention = 10
+
+  /** Hudi-cleaner analogue: keep the pre-images of the newest `retainLast`
+    * archived rewrite commits, drop older ones (bounding archive storage to
+    * retainLast × replaced-partition data). readAsOf / rollback past the
+    * horizon fail explicitly. Auto-run inline after every rewrite commit,
+    * like Hudi's inline cleaner. Returns the cleaned commit times.
+    */
   def cleanArchive(
       spark: SparkSession, tablePath: String, retainLast: Int = ArchiveRetention): Seq[String] = {
     val fs = CommitLog.fs(spark, tablePath)
@@ -2400,17 +2326,10 @@ object KeyedTable {
     val atS = CommitLog.stateOf(all.filter(_.commitTime <= instant))
     val now = CommitLog.stateOf(all)
     val partF = atS.latest.partitionFields
-    def firstRewriteAfter(p: String): Option[CommitInfo] =
-      later.find(c => RewriteOps(c.operation) &&
-        c.partitions.exists(e => e.path == p && (e.mode == "native" || e.mode == "dropped")))
-    def retentionError(p: String, ct: String) = GraftException.config(
-      s"Cannot restore to $instant: pre-image of partition '$p' " +
-        s"(archived by commit $ct) has been cleaned — archive retention exceeded.")
+    val cannot = s"Cannot restore to $instant"
 
     if (partF.isEmpty) {
-      firstRewriteAfter("").foreach { c =>
-        val ad = Archive.dataDir(tablePath, c.commitTime)
-        if (!fs.exists(ad)) throw retentionError("", c.commitTime)
+      preImageRoot(fs, tablePath, later, "", cannot).foreach { ad =>
         fs.listStatus(new Path(tablePath)).filter(_.isFile)
           .filterNot(f => f.getPath.getName.startsWith(".") || f.getPath.getName.startsWith("_"))
           .foreach(f => fs.delete(f.getPath, false))
@@ -2424,9 +2343,8 @@ object KeyedTable {
       // partitions native at the savepoint: swap in the first post-savepoint
       // pre-image; partitions no rewrite touched are already the S state
       atS.nativePartitions.foreach { p =>
-        firstRewriteAfter(p).foreach { c =>
-          val arch = new Path(Archive.dataDir(tablePath, c.commitTime), PathCodec.escape(p))
-          if (!fs.exists(arch)) throw retentionError(p, c.commitTime)
+        preImageRoot(fs, tablePath, later, p, cannot).foreach { root =>
+          val arch = new Path(root, PathCodec.escape(p))
           val liveDir = new Path(s"$tablePath/${PathCodec.escape(p)}")
           if (fs.exists(liveDir)) fs.delete(liveDir, true)
           if (!fs.exists(liveDir.getParent)) fs.mkdirs(liveDir.getParent)
@@ -2633,14 +2551,9 @@ object KeyedTable {
       val dir = new Path(s"$tablePath/${PathCodec.escape(p)}")
       if (fs.exists(dir)) Archive.stash(fs, tablePath, ct, PathCodec.escape(p), dir)
     }
-    publishRewrite(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = "delete_partition", tableName = st.latest.tableName,
-      tableType = st.latest.tableType, keyFields = st.latest.keyFields,
-      precombineField = st.latest.precombineField, partitionFields = partF,
-      // recordCount 0: counting would defeat the O(metadata) contract
-      partitions = partitions.sorted.map(p => PartitionEntry(p, "dropped", 0L)),
-      recordCount = 0L, schemaDdl = st.latest.schemaDdl, sourcePath = None),
-      baseInstant = Some(st.latest.commitTime))
+    // recordCount 0: counting would defeat the O(metadata) contract
+    publishRewrite(spark, tablePath, st, commitOf(st, ct, "delete_partition",
+      partitions.sorted.map(p => PartitionEntry(p, "dropped", 0L)), st.latest.schemaDdl))
     cleanArchive(spark, tablePath)
     partitions.sorted
   }
@@ -2712,6 +2625,8 @@ object KeyedTable {
     }
     val rows = readPartitions(spark, tablePath, st, targets).drop(hidden: _*)
     val ct = CommitLog.newCommitTime()
+    // its own tail, not rewriteCommit: the ddl and mapping it publishes are
+    // decided between the swap and the publish
     CommitLog.beginInflight(spark, tablePath, ct, "reclaim", targets,
       baseCommits = st.commits.map(_.commitTime))
     val counts = stageAndSwap(spark, tablePath, rows, partF, targets, ct)
@@ -2728,15 +2643,10 @@ object KeyedTable {
         .map(_.getPath.toString).toSeq
     }
     val shed = !StatsIndex.footerCarriesAny(spark, outside, hidden.toSet)
-    publishRewrite(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = "reclaim", tableName = st.latest.tableName,
-      tableType = st.latest.tableType, keyFields = st.latest.keyFields,
-      precombineField = st.latest.precombineField, partitionFields = partF,
-      partitions = targets.map(p => PartitionEntry(p, "native", counts.getOrElse(p, 0L))),
-      recordCount = counts.values.sum,
-      schemaDdl = if (shed) newSchema.toDDL else st.latest.schemaDdl, sourcePath = None,
-      columnMapping = if (shed) Some(newMapping) else None),
-      baseInstant = Some(st.latest.commitTime))
+    publishRewrite(spark, tablePath, st, commitOf(st, ct, "reclaim",
+      targets.map(p => PartitionEntry(p, "native", counts.getOrElse(p, 0L))),
+      if (shed) newSchema.toDDL else st.latest.schemaDdl)
+      .copy(columnMapping = if (shed) Some(newMapping) else None))
     targets
   }
 
@@ -2753,22 +2663,11 @@ object KeyedTable {
     val targets = partitions.getOrElse(if (partF.isEmpty) Seq("") else st.nativePartitions)
     if (targets.isEmpty) return Seq.empty
 
-    val rows = readPartitions(spark, tablePath, st, targets)
-    val clustered = shape(rows, partF)
-    CommitLog.beginInflight(spark, tablePath, ct, "cluster", targets,
-      baseCommits = st.commits.map(_.commitTime))
-    val counts = stageAndSwap(spark, tablePath, clustered, partF, targets, ct,
+    val clustered = shape(readPartitions(spark, tablePath, st, targets), partF)
+    rewriteCommit(spark, tablePath, st, ct, "cluster", clustered, targets, st.latest.schemaDdl,
       writeOptions = if (maxRecordsPerFile > 0) Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)
         else Map.empty,
       preShaped = true)
-
-    publishRewrite(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = "cluster", tableName = st.latest.tableName,
-      tableType = st.latest.tableType, keyFields = st.latest.keyFields,
-      precombineField = st.latest.precombineField, partitionFields = partF,
-      partitions = targets.map(p => PartitionEntry(p, "native", counts.getOrElse(p, 0L))),
-      recordCount = counts.values.sum, schemaDdl = st.latest.schemaDdl, sourcePath = None),
-      baseInstant = Some(st.latest.commitTime))
     targets
   }
 
@@ -2789,10 +2688,7 @@ object KeyedTable {
       case WriteOperation.Insert => Upsert.dedupByKey(phys, keyF, st.latest.precombineField, partF)
       case _ => phys
     }
-    val touched: Seq[String] =
-      if (partF.isEmpty) Seq("")
-      else rows.select(ppCol(partF).as("__pp")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
+    val touched = touchedPartitions(partF, rows)
 
     // materialize commits its OWN instant, so this append's instant must be
     // issued AFTER it — the commit log refuses non-increasing instants.
@@ -2834,7 +2730,7 @@ object KeyedTable {
 
     val counts =
       if (moved.isEmpty) Map.empty[String, Long]
-      else partitionCountsOf(spark.read.parquet(moved.map(_.toString): _*), partF)
+      else partitionCounts(spark.read.parquet(moved.map(_.toString): _*), partF).toMap
     try CommitLog.write(spark, tablePath, CommitInfo(
       commitTime = ct, operation = op.name, tableName = st.latest.tableName,
       tableType = st.latest.tableType, keyFields = keyF,
@@ -2859,17 +2755,13 @@ object KeyedTable {
       spark: SparkSession, tablePath: String, st: TableState, parts: Seq[String]): Unit = {
     if (parts.isEmpty) return
     val ct = CommitLog.newCommitTime()
+    // its own tail, not rewriteCommit: a materialize records zero counts
     CommitLog.beginInflight(spark, tablePath, ct, "materialize", parts,
       baseCommits = st.commits.map(_.commitTime))
     val slice = readPartitions(spark, tablePath, st, parts) // already carries meta cols
     stageAndSwap(spark, tablePath, slice, st.latest.partitionFields, parts, ct)
-    publishRewrite(spark, tablePath, CommitInfo(
-      commitTime = ct, operation = "materialize", tableName = st.latest.tableName,
-      tableType = st.latest.tableType, keyFields = st.latest.keyFields,
-      precombineField = st.latest.precombineField, partitionFields = st.latest.partitionFields,
-      partitions = parts.map(p => PartitionEntry(p, "native", 0L)),
-      recordCount = 0L, schemaDdl = st.latest.schemaDdl, sourcePath = None),
-      baseInstant = Some(st.latest.commitTime))
+    publishRewrite(spark, tablePath, st, commitOf(st, ct, "materialize",
+      parts.map(p => PartitionEntry(p, "native", 0L)), st.latest.schemaDdl))
   }
 
   /** Read only the given partitions of the live table (native from their
@@ -3011,21 +2903,13 @@ object KeyedTable {
     StatsIndex.footerRowCounts(spark, files)
   }
 
-  /** Per-partition counts as ONE grouped aggregate (A3 fused with A1). */
-  private def partitionCounts(
-      df: DataFrame,
-      partF: Seq[String],
-      fromPartitionPathCol: Boolean = false): Seq[(String, Long)] = {
-    if (partF.isEmpty) return Seq("" -> df.count())
-    val pp = if (fromPartitionPathCol) col(MetaColumns.PartitionPath) else ppCol(partF)
-    df.groupBy(pp.as("__pp")).agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
-  }
-
-  private def partitionCountsOf(df: DataFrame, partF: Seq[String]): Map[String, Long] =
-    if (partF.isEmpty) Map("" -> df.count())
+  /** Per-partition counts as ONE grouped aggregate (A3 fused with A1),
+    * sorted by partition path, grouped on `df`'s partition-path meta column.
+    */
+  private def partitionCounts(df: DataFrame, partF: Seq[String]): Seq[(String, Long)] =
+    if (partF.isEmpty) Seq("" -> df.count())
     else df.groupBy(col(MetaColumns.PartitionPath)).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
 
   /** M5: existing partitions = directory listing (unescaped) ∪ commit-log
     * registrations (covers metadata-only partitions with no dirs).

@@ -40,10 +40,6 @@ private[table] object RetrainAdvisor {
 
   private val Service = "retrain.auto"
 
-  private val skipOps = Set(
-    "index_stats", "index_bloom", "alter_schema", "compact", "reclaim",
-    "cluster", "materialize")
-
   private val inCheck = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
@@ -51,7 +47,7 @@ private[table] object RetrainAdvisor {
   def afterPublish(
       spark: SparkSession, tablePath: String, operation: String,
       props: Map[String, String]): Unit = {
-    if (inCheck.get() || skipOps(operation)) return
+    if (inCheck.get() || CommitLog.RowNeutralOps(operation)) return
     val threshold = props.get(Prop)
       .flatMap(v => scala.util.Try(v.trim.toDouble).toOption)
       .filter(t => t > 0 && t <= 1)

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine jar carries no measurement tooling and no undocumented knobs:
   * probe mains and variant switches belong in a scratch checkout, and a
-  * knob the README does not explain is one nobody can set on purpose.
+  * knob the README does not explain is one nobody can set on purpose. And
+  * every keyed write publishes through one of KeyedTable's two tails, so a
+  * change to the commit protocol is made once, not per write path.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -25,6 +27,18 @@ class SourceGuardSpec extends AnyFunSuite {
       case (path, text) if pattern.r.findFirstIn(text).isDefined =>
         Paths.get(path).getFileName.toString.stripSuffix(".scala")
     }.toSet
+
+  /** The method enclosing each call site of `call` (the nearest `def`
+    * above it), over every main source file, sorted.
+    */
+  private def callers(call: String): Seq[String] = {
+    val site = ("(?<!def )" + java.util.regex.Pattern.quote(call)).r
+    val defn = raw"\bdef\s+(\w+)".r
+    sources.values.toSeq.flatMap { text =>
+      site.findAllMatchIn(text).map(m =>
+        defn.findAllMatchIn(text.substring(0, m.start)).toSeq.last.group(1))
+    }.sorted
+  }
 
   test("only Main, Bench and Verify define a main") {
     assert(filesMatching(raw"def main\(") === Set("Main", "Bench", "Verify"))
@@ -50,5 +64,16 @@ class SourceGuardSpec extends AnyFunSuite {
     val documented = raw"(?m)^\| `([^`]+)` \|".r.findAllMatchIn(table).map(_.group(1)).toSet
     assert(names.toSet === documented,
       "README's knob table and the names read in src/main/scala differ")
+  }
+
+  test("every keyed table write lands its delta batch through one method") {
+    assert(callers("Deltas.write(") === Seq("writeDeltaCounted"))
+  }
+
+  test("every partition swap runs in the rewrite tail or a named own tail") {
+    // reclaim decides its ddl between the swap and the publish, and
+    // materialize publishes zero counts: the two commits that keep their
+    // own tail instead of KeyedTable.rewriteCommit
+    assert(callers("stageAndSwap(") === Seq("materialize", "reclaim", "rewriteCommit"))
   }
 }

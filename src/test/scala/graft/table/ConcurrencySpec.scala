@@ -21,7 +21,9 @@ import graft.table.CommitLog.{CommitInfo, PartitionEntry}
 class ConcurrencySpec extends SparkTestBase {
   import spark.implicits._
 
-  private def bootstrapMor(dir: String, name: String): (String, String) = {
+  private def bootstrapTable(
+      dir: String, name: String,
+      tableType: TableType = TableType.MergeOnRead): (String, String) = {
     val tbl = s"$dir/tbl"
     val in = s"$dir/in"
     spark.read.parquet(sf("orders"))
@@ -30,7 +32,7 @@ class ConcurrencySpec extends SparkTestBase {
     val boot = KeyedTable.bootstrap(spark, BootstrapConfig(
       dataFilePath = in, tablePath = tbl, tableName = name,
       keyFields = Seq("o_orderkey"), precombineField = "o_orderdate",
-      partitionFields = Seq("o_month"), tableType = TableType.MergeOnRead))
+      partitionFields = Seq("o_month"), tableType = tableType))
     (tbl, boot.commitTime)
   }
 
@@ -73,7 +75,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("overlapping writers: loser aborts retryably, never leaks, fsck clears it") {
-    val (tbl, c0) = bootstrapMor(tmpDir("occ-overlap"), "occ_overlap")
+    val (tbl, c0) = bootstrapTable(tmpDir("occ-overlap"), "occ_overlap")
     val month = "1995-01"
 
     // writer A allocates its instant and stages, but is slow to publish
@@ -123,7 +125,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("disjoint writers interleave: slower writer publishes under the tip") {
-    val (tbl, c0) = bootstrapMor(tmpDir("occ-disjoint"), "occ_disjoint")
+    val (tbl, c0) = bootstrapTable(tmpDir("occ-disjoint"), "occ_disjoint")
 
     val ctA = CommitLog.newCommitTime()
     val infoA = stageDelta(tbl, ctA, "1995-02", "AA")
@@ -145,7 +147,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("a concurrent schema change conflicts with EVERY in-flight writer (no silent revert)") {
-    val (tbl, c0) = bootstrapMor(tmpDir("occ-schema"), "occ_schema")
+    val (tbl, c0) = bootstrapTable(tmpDir("occ-schema"), "occ_schema")
 
     // writer A stages on a disjoint partition with the PRE-alter schema
     val ctA = CommitLog.newCommitTime()
@@ -182,7 +184,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("a metadata-only RENAME (physical ddl unchanged) still conflicts with in-flight writers") {
-    val (tbl, c0) = bootstrapMor(tmpDir("occ-rename"), "occ_rename")
+    val (tbl, c0) = bootstrapTable(tmpDir("occ-rename"), "occ_rename")
     val ddlBefore = CommitLog.requireState(spark, tbl).latest.schemaDdl
 
     val ctA = CommitLog.newCommitTime()
@@ -205,7 +207,7 @@ class ConcurrencySpec extends SparkTestBase {
 
   test("a NON-shedding reclaim campaign batch and a disjoint in-flight append both land; " +
       "only a SHEDDING reclaim serializes against everyone") {
-    val (tbl, _) = bootstrapMor(tmpDir("occ-reclaim"), "occ_reclaim")
+    val (tbl, _) = bootstrapTable(tmpDir("occ-reclaim"), "occ_reclaim")
     KeyedTable.dropColumns(spark, tbl, Seq("o_orderpriority"))
     val afterDrop = CommitLog.requireState(spark, tbl).latest.commitTime
 
@@ -277,7 +279,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("a publish whose base instant left the active log aborts instead of degrading") {
-    val (tbl, c0) = bootstrapMor(tmpDir("occ-basegone"), "occ_basegone")
+    val (tbl, c0) = bootstrapTable(tmpDir("occ-basegone"), "occ_basegone")
     // one more commit so there is a non-bootstrap base to roll back
     val base = KeyedTable.read(spark, tbl)
     val dataCols = base.columns.filterNot(_.startsWith("_")).map(col).toSeq
@@ -304,7 +306,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("conflict detected against a commit published BELOW the writer's base instant") {
-    val (tbl, c0) = bootstrapMor(tmpDir("occ-ooo"), "occ_ooo")
+    val (tbl, c0) = bootstrapTable(tmpDir("occ-ooo"), "occ_ooo")
     val month = "1995-01"
 
     // slow writer C allocates its instant early and stages on month M
@@ -343,7 +345,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("fsck sweeps a crashed append's commit-stamped files out of shared partition dirs") {
-    val (tbl, _) = bootstrapMor(tmpDir("occ-append"), "occ_append")
+    val (tbl, _) = bootstrapTable(tmpDir("occ-append"), "occ_append")
     val month = "1995-01"
     val pp = s"o_month=$month"
     val before = KeyedTable.read(spark, tbl).count()
@@ -370,7 +372,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("same instant cannot be staged twice") {
-    val (tbl, _) = bootstrapMor(tmpDir("occ-instant"), "occ_instant")
+    val (tbl, _) = bootstrapTable(tmpDir("occ-instant"), "occ_instant")
     val ct = CommitLog.newCommitTime()
     CommitLog.beginInflight(spark, tbl, ct, "delta_commit", Seq("1995-01"))
     intercept[java.io.IOException] {
@@ -380,7 +382,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("concurrent threads on disjoint partitions all succeed; same-partition conflicts retry to convergence") {
-    val (tbl, _) = bootstrapMor(tmpDir("occ-threads"), "occ_threads")
+    val (tbl, _) = bootstrapTable(tmpDir("occ-threads"), "occ_threads")
     val base = KeyedTable.read(spark, tbl)
     val dataCols = base.columns.filterNot(_.startsWith("_")).map(col).toSeq
     val pool = Executors.newFixedThreadPool(2)
@@ -468,7 +470,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("file lease: atomic acquire, held blocks, expiry steals with a higher token, fsck sweeps") {
-    val (tbl, _) = bootstrapMor(tmpDir("lock"), "lock_t")
+    val (tbl, _) = bootstrapTable(tmpDir("lock"), "lock_t")
 
     // acquire / held / release round-trip
     val l1 = TableLock.tryAcquire(spark, tbl, "writer-A").get
@@ -522,7 +524,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("lease heartbeat renewal keeps a slow publish alive past its original TTL") {
-    val (tbl, _) = bootstrapMor(tmpDir("lock-renew"), "lock_renew")
+    val (tbl, _) = bootstrapTable(tmpDir("lock-renew"), "lock_renew")
     spark.conf.set("spark.graft.lock.ttlMs", "700")
     try {
       // WITHOUT renewal: the lease expires and a competitor steals — the
@@ -576,7 +578,7 @@ class ConcurrencySpec extends SparkTestBase {
   test("concurrent property writers never drop each other's keys " +
       "(user set_property racing a maintenance-hook cursor write)") {
     val dir = tmpDir("props-race")
-    val (tbl, _) = bootstrapMor(dir, "props_race")
+    val (tbl, _) = bootstrapTable(dir, "props_race")
     // the r10 failure shape: a hook's cursor RMW racing a user's flag RMW —
     // under last-writer-wins one silently reverts the other. 8 threads × 5
     // rounds of disjoint-key set/unset; every final key must reflect ITS
@@ -624,27 +626,35 @@ class ConcurrencySpec extends SparkTestBase {
 
   test("mergeRows with a PINNED base detects a commit landed after the pinned " +
       "read; an unpinned merge absorbs it silently - the TOCTOU readPinned closes") {
-    val dir = tmpDir("pinned-merge")
-    val (tbl, _) = bootstrapMor(dir, "pinned_merge")
-    val src = spark.read.parquet(sf("orders"))
-      .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-    val one = src.orderBy("o_orderkey").limit(1)
-    val noDels = one.filter(lit(false)).select("o_orderkey", "o_month")
-    // the read-modify-write writer pins the snapshot its images derive from...
-    val (st0, _) = KeyedTable.readPinned(spark, tbl)
-    // ...and a rival lands a commit on the same partition before it publishes
-    KeyedTable.upsert(spark, tbl, one)
-    // stale-based merge: the rival's commit is NOT in the pinned base and
-    // overlaps this merge's partition, so the publish aborts retryably -
-    // deterministically, regardless of thread interleavings
-    intercept[CommitConflictException] {
-      KeyedTable.mergeRows(spark, tbl, noDels, one, base = Some(st0))
+    Seq(TableType.MergeOnRead, TableType.CopyOnWrite).foreach { tableType =>
+      val dir = tmpDir("pinned-merge")
+      val (tbl, _) = bootstrapTable(dir, "pinned_merge", tableType)
+      val src = spark.read.parquet(sf("orders"))
+        .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
+      val one = src.orderBy("o_orderkey").limit(1)
+      val noDels = one.filter(lit(false)).select("o_orderkey", "o_month")
+      // the read-modify-write writer pins the snapshot its images derive from...
+      val (st0, _) = KeyedTable.readPinned(spark, tbl)
+      // ...and a rival lands a commit on the same partition before it publishes
+      KeyedTable.upsert(spark, tbl, one)
+      val committed = CommitLog.commits(spark, tbl).map(_.commitTime).toSet
+      // stale-based merge: the rival's commit is NOT in the pinned base and
+      // overlaps this merge's partition, so the publish aborts retryably -
+      // deterministically, regardless of thread interleavings
+      intercept[CommitConflictException] {
+        KeyedTable.mergeRows(spark, tbl, noDels, one, base = Some(st0))
+      }
+      // the loser cleans up after itself: no commit, no delta batch, no
+      // inflight marker, nothing for fsck to repair
+      assert(CommitLog.commits(spark, tbl).map(_.commitTime).toSet === committed, tableType.name)
+      assert(Deltas.liveCommits(spark, tbl).forall(committed), tableType.name)
+      assert(CommitLog.inflights(spark, tbl).isEmpty, tableType.name)
+      assert(KeyedTable.fsck(spark, tbl, repair = false).clean, tableType.name)
+      // contrast: without the pin, mergeRows reads a FRESH base at entry - the
+      // rival is absorbed and the stale images land with no conflict anywhere
+      // (correct for plain merges; fatal for read-derived ones - hence the pin)
+      KeyedTable.mergeRows(spark, tbl, noDels, one)
     }
-    // contrast: without the pin, mergeRows reads a FRESH base at entry - the
-    // rival is absorbed and the stale images land with no conflict anywhere
-    // (correct for plain merges; fatal for read-derived ones - hence the pin)
-    KeyedTable.mergeRows(spark, tbl, noDels, one)
-    ()
   }
 
   test("create stamps birth properties atomically with the table - fresh AND " +
@@ -670,7 +680,7 @@ class ConcurrencySpec extends SparkTestBase {
 
   test("concurrent maintenance hooks for different services both keep their journal rows") {
     val dir = tmpDir("maint-race")
-    val (tbl, _) = bootstrapMor(dir, "maint_race")
+    val (tbl, _) = bootstrapTable(dir, "maint_race")
     // two services journaling concurrently (index.auto in writer A,
     // compact.auto in writer B): without the shared mutex each stale read
     // rewrites the file minus the OTHER service's latest row

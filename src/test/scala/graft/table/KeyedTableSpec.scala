@@ -352,17 +352,63 @@ class KeyedTableSpec extends SparkTestBase {
 
   test("commit timeline DataFrame reflects the operation history") {
     val in = ordersWithMonth(tmpDir("in"))
-    val table = tmpDir("tbl")
-    KeyedTable.bootstrap(spark, cfg(in, table))
-    val base = KeyedTable.read(spark, table)
-    val upd = base.filter(col("o_orderkey") === 1)
-      .select(base.columns.filterNot(_.startsWith("_")).map(col).toSeq: _*)
-    KeyedTable.upsert(spark, table, upd)
-    val tl = KeyedTable.timeline(spark, table)
-      .select("operation", "record_count").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toSeq
-    assert(tl.map(_._1) === Seq("bootstrap", "upsert"))
-    assert(tl.head._2 === 1500L)
+    // (operation, record_count, n_partitions, partition_rows) of every commit
+    // of the same keyed-write sequence on each table type. COW rewrites count
+    // the rows of every touched partition; MOR delta batches count the
+    // batch's own rows (images and tombstones).
+    val expected = Map(
+      TableType.CopyOnWrite -> Seq(
+        ("bootstrap", 1500L, 80L, 1500L),
+        ("upsert", 88L, 4L, 88L),
+        ("delete", 45L, 2L, 45L),
+        ("merge", 39L, 2L, 39L),
+        ("upsert_global", 38L, 2L, 38L),
+        ("upsert", 12L, 1L, 12L),
+        ("cluster", 1498L, 80L, 1498L)),
+      TableType.MergeOnRead -> Seq(
+        ("bootstrap", 1500L, 80L, 1500L),
+        ("delta_commit", 4L, 4L, 4L),
+        ("delete", 2L, 2L, 2L),
+        ("merge", 2L, 2L, 2L),
+        ("upsert_global", 2L, 2L, 2L),
+        ("delta_commit", 1L, 1L, 1L),
+        ("compact", 180L, 9L, 180L),
+        ("cluster", 1498L, 80L, 1498L)))
+    expected.foreach { case (tableType, want) =>
+      val table = tmpDir(s"tbl-${tableType.name}")
+      KeyedTable.bootstrap(spark, cfg(in, table).copy(tableType = tableType))
+      val base = KeyedTable.read(spark, table)
+      // materialized: every rewrite below replaces the files `base` reads
+      val src = base.filter(col("o_orderkey").isin(1, 2, 3, 4, 5, 6, 7, 32, 33))
+        .select(base.columns.filterNot(_.startsWith("_")).map(col).toSeq: _*)
+        .localCheckpoint()
+      def rows(keys: Long*) = src.filter(col("o_orderkey").isin(keys: _*))
+      // 3 updates + 1 insert into an existing month
+      KeyedTable.upsert(spark, table, rows(1, 2, 3).withColumn("o_orderstatus", lit("upserted"))
+        .unionByName(rows(4).withColumn("o_orderkey", lit(100001L))))
+      KeyedTable.delete(spark, table, rows(4, 5).select("o_orderkey", "o_month"))
+      KeyedTable.mergeRows(spark, table, rows(6).select("o_orderkey", "o_month"),
+        rows(7).withColumn("o_orderstatus", lit("merged")))
+      // a global upsert that moves key 32 into another month
+      KeyedTable.upsertGlobal(spark, table, rows(32).withColumn("o_month", lit("1995-01")))
+      KeyedTable.upsertPartial(spark, table,
+        rows(33).select(col("o_orderkey"), col("o_month"), col("o_orderdate"),
+          lit("patched").as("o_orderstatus")))
+      if (tableType == TableType.MergeOnRead) KeyedTable.compact(spark, table)
+      KeyedTable.cluster(spark, table, Seq("o_orderkey"))
+
+      val tl = KeyedTable.timeline(spark, table)
+        .select("operation", "record_count", "n_partitions", "partition_rows").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(tl === want, tableType.name)
+      // no batch evolved the schema, so every commit records the bootstrap's ddl
+      assert(CommitLog.commits(spark, table).map(_.schemaDdl).distinct.size === 1)
+      val out = KeyedTable.read(spark, table)
+      assert(out.count() === 1498L)
+      assert(out.filter(col("o_orderstatus").isin("upserted", "merged", "patched")).count() === 5L)
+      assert(out.filter(col("o_orderkey") === 32).select("o_month").as[String].collect()
+        === Array("1995-01"))
+    }
   }
 
   test("dry_run plans and validates but writes nothing") {
